@@ -698,18 +698,6 @@ def line_boundary_points(coords: np.ndarray, ring_offsets: np.ndarray) -> np.nda
     return np.asarray(pts, dtype=np.float64).reshape(-1, 2)
 
 
-def _hole_probes(coords, ring_offsets):
-    """One interior probe point per hole ring (the ring's centroid when it
-    actually lies inside that ring; otherwise skipped — conservative)."""
-    probes = []
-    for ridx in range(1, len(ring_offsets) - 1):
-        ring = coords[ring_offsets[ridx]:ring_offsets[ridx + 1]]
-        cx, cy = polygon_centroid(ring, np.asarray([0, len(ring)]))
-        if bool(points_in_polygon([cx], [cy], ring, np.asarray([0, len(ring)]))[0]):
-            probes.append((cx, cy))
-    return probes
-
-
 def _escape_witness(ca, oa, cb, ob) -> bool:
     """EXACT disproof of "B ⊆ closure(A)" for regions B's boundary never
     enters: True iff some point OUTSIDE closure(A) lies strictly inside
@@ -738,8 +726,9 @@ def _escape_witness(ca, oa, cb, ob) -> bool:
             continue
         mids = (xs[:-1] + xs[1:]) / 2.0
         # interval k (between xs[k], xs[k+1]) has k+1 crossings to its
-        # left: odd ⇒ inside A, even ⇒ outside — take the even ones
-        outside = mids[(np.arange(len(mids)) + 1) % 2 == 0]
+        # left: odd ⇒ inside A, even ⇒ outside — take the even ones of
+        # positive width (a zero-width one is a doubled edge, ON A)
+        outside = mids[((np.arange(len(mids)) + 1) % 2 == 0) & (np.diff(xs) > 0)]
         if len(outside) == 0:
             continue
         cls = classify_points_in_polygon(outside, np.full(len(outside), ym), cb, np.asarray(ob))
@@ -1503,6 +1492,33 @@ def wkt_polygon_exact(coords: np.ndarray, ring_offsets: np.ndarray) -> str:
     return f"POLYGON ({', '.join(rings)})"
 
 
+_VOTE_CELLS = 1 << 22  # points × edges per containment-vote matrix
+
+
+def _strict_votes(px, py, rings: list) -> tuple[np.ndarray, np.ndarray]:
+    """(strictly-inside, strictly-outside) counts of the sample points
+    against each ring — classify_points_in_polygon per ring, vectorized
+    over all rings at once (boundary points count for neither)."""
+    x1 = np.concatenate([r[:-1, 0] for r in rings])
+    y1 = np.concatenate([r[:-1, 1] for r in rings])
+    x2 = np.concatenate([r[1:, 0] for r in rings])
+    y2 = np.concatenate([r[1:, 1] for r in rings])
+    starts = np.concatenate([[0], np.cumsum([len(r) - 1 for r in rings])[:-1]])
+    lon, lat = np.asarray(px)[:, None], np.asarray(py)[:, None]
+    o = (x2 - x1) * (lat - y1) - (y2 - y1) * (lon - x1)
+    on_edge = (
+        (o == 0.0)
+        & (lon >= np.minimum(x1, x2)) & (lon <= np.maximum(x1, x2))
+        & (lat >= np.minimum(y1, y2)) & (lat <= np.maximum(y1, y2))
+    )
+    straddle = (y1 > lat) != (y2 > lat)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xint = (x2 - x1) * (lat - y1) / (y2 - y1) + x1
+    odd = np.add.reduceat(straddle & (lon < xint), starts, axis=1) % 2 == 1
+    free = ~np.logical_or.reduceat(on_edge, starts, axis=1)
+    return (odd & free).sum(axis=0), (~odd & free).sum(axis=0)
+
+
 def multipolygon_parts(coords: np.ndarray, ring_offsets: np.ndarray) -> list[tuple[int, list[int]]]:
     """Group a flat ring list into member polygons [(shell_ring_idx,
     [hole_ring_idx, ...])] by containment depth: a ring at even nesting
@@ -1510,7 +1526,9 @@ def multipolygon_parts(coords: np.ndarray, ring_offsets: np.ndarray) -> list[tup
     container. Reconstructs OGC structure for serialization (the internal
     parity representation is grouping-agnostic)."""
     nrings = len(ring_offsets) - 1
-    rings = [coords[ring_offsets[r]:ring_offsets[r + 1]] for r in range(nrings)]
+    c = np.asarray(coords, dtype=np.float64)
+    rings = [c[ring_offsets[r]:ring_offsets[r + 1]] for r in range(nrings)]
+    bb = np.asarray([(r[:, 0].min(), r[:, 1].min(), r[:, 0].max(), r[:, 1].max()) for r in rings])
     containers: list[list[int]] = [[] for _ in range(nrings)]
     for i in range(nrings):
         # majority vote over the ring's vertices AND edge midpoints
@@ -1519,16 +1537,33 @@ def multipolygon_parts(coords: np.ndarray, ring_offsets: np.ndarray) -> list[tup
         # is arbitrary. Midpoints matter: a hole ALL of whose vertices
         # are pinch points on the shell (symdifference's union-with-
         # intersection-hole form) gets zero vertex votes, and without
-        # midpoints it would orphan into its own filled shell.
+        # midpoints it would orphan into its own filled shell. Exact
+        # prefilter: a sample outside ring j's bbox is strictly outside
+        # ring j, so j cannot win the vote unless more samples fall in
+        # its (closed) bbox than outside it.
         px = np.concatenate([rings[i][:-1, 0], (rings[i][:-1, 0] + rings[i][1:, 0]) / 2.0])
         py = np.concatenate([rings[i][:-1, 1], (rings[i][:-1, 1] + rings[i][1:, 1]) / 2.0])
-        for j in range(nrings):
-            if i == j:
+        near = (bb[:, 0] <= bb[i, 2]) & (bb[:, 2] >= bb[i, 0]) & (bb[:, 1] <= bb[i, 3]) & (bb[:, 3] >= bb[i, 1])
+        near[i] = False
+        js = np.flatnonzero(near)
+        if len(js):
+            b = bb[js]
+            in_bb = (
+                (px[:, None] >= b[:, 0]) & (px[:, None] <= b[:, 2])
+                & (py[:, None] >= b[:, 1]) & (py[:, None] <= b[:, 3])
+            ).sum(axis=0)
+            js = js[2 * in_bb > len(px)]
+        if not len(js):
+            continue
+        # batches of candidate rings keep each points × edges matrix small
+        cum = np.cumsum([len(rings[j]) for j in js])
+        batch = cum // max(1, _VOTE_CELLS // len(px))
+        for k in range(int(batch[-1]) + 1):
+            jb = js[batch == k]
+            if not len(jb):
                 continue
-            off_j = np.asarray([0, len(rings[j])])
-            cls = classify_points_in_polygon(px, py, rings[j], off_j)
-            if (cls == 2).sum() > (cls == 0).sum():
-                containers[i].append(j)
+            n_in, n_out = _strict_votes(px, py, [rings[j] for j in jb])
+            containers[i].extend(jb[n_in > n_out].tolist())
     depth = [len(c) for c in containers]
     parts: list[tuple[int, list[int]]] = []
     shell_part = {}
@@ -1957,72 +1992,6 @@ def line_difference_line(a_coords: np.ndarray, b_coords: np.ndarray) -> list[np.
         if cur < 1.0:
             kept.append(np.asarray([p + cur * np.asarray([dx, dy]), p + 1.0 * np.asarray([dx, dy])]))
     return _chain_pieces(kept)
-
-
-def chain_closed_rings(pieces: list[np.ndarray], tol: float = 1e-9) -> list[np.ndarray] | None:
-    """Assemble polyline pieces into closed rings by endpoint matching
-    (endpoints snapped within ``tol`` — cut points computed independently
-    on the two operands of a boundary overlay agree only to float eps).
-    Returns None unless every snapped endpoint has degree exactly 2 and
-    every walk closes: the honest-failure contract of the
-    boundary-rechaining overlay fallback (an ambiguous junction or an
-    open chain is never guessed at)."""
-    rings: list[np.ndarray] = []
-    open_segs: list[np.ndarray] = []
-    for p in pieces:
-        s = np.asarray(p, dtype=np.float64)
-        if len(s) < 2:
-            continue
-        if abs(s[0, 0] - s[-1, 0]) <= tol and abs(s[0, 1] - s[-1, 1]) <= tol:
-            if len(s) < 4:
-                return None  # closed sliver: degenerate
-            r = s.copy()
-            r[-1] = r[0]
-            rings.append(r)
-        else:
-            open_segs.append(s)
-    if open_segs:
-        pts = [e for s in open_segs for e in (s[0], s[-1])]
-        canon = list(range(len(pts)))
-        for i in range(len(pts)):
-            for j in range(i):
-                if canon[j] == j and abs(pts[i][0] - pts[j][0]) <= tol and abs(pts[i][1] - pts[j][1]) <= tol:
-                    canon[i] = j
-                    break
-        at: dict[int, list[tuple[int, bool]]] = {}
-        for si in range(len(open_segs)):
-            at.setdefault(canon[2 * si], []).append((si, True))
-            at.setdefault(canon[2 * si + 1], []).append((si, False))
-        if any(len(v) != 2 for v in at.values()):
-            return None
-        used = [False] * len(open_segs)
-        for start in range(len(open_segs)):
-            if used[start]:
-                continue
-            chain = [open_segs[start]]
-            used[start] = True
-            start_key = canon[2 * start]
-            cur_key = canon[2 * start + 1]
-            for _guard in range(len(open_segs)):
-                if cur_key == start_key:
-                    break
-                nxt = [(si, at_start) for si, at_start in at[cur_key] if not used[si]]
-                if len(nxt) != 1:
-                    return None
-                si, at_start = nxt[0]
-                used[si] = True
-                chain.append(open_segs[si] if at_start else open_segs[si][::-1])
-                cur_key = canon[2 * si + 1] if at_start else canon[2 * si]
-            else:
-                return None  # open chain: junctions never closed a ring
-            # the final piece already ends (within tol) at the start
-            # point — snap it exactly closed rather than appending
-            ring = np.concatenate([chain[0]] + [c[1:] for c in chain[1:]])
-            ring[-1] = ring[0]
-            if len(ring) < 4:
-                return None
-            rings.append(ring)
-    return rings
 
 
 # --- CRS transform (EPSG:4326 <-> EPSG:3857) --------------------------------

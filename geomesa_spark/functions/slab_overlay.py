@@ -1,112 +1,158 @@
-"""Slab-sweep boolean overlay for (MULTI)POLYGON pairs — the
-degenerate-contact fallback of last resort.
+"""Slab-sweep boolean overlay for (MULTI)POLYGON pairs — the areal
+overlay kernel behind st_intersection, st_union, st_difference and
+st_symDifference.
 
-The crossing-based kernels (Greiner–Hormann fold, half-plane clips,
-boundary rechaining) refuse inputs whose boundaries interact
-degenerately (partially shared edges, vertex-on-edge chains,
-checkerboard corners). This module computes the boolean by vertical
-trapezoidal decomposition instead, which has NO special cases for
-degeneracy:
+Vertical trapezoidal decomposition has NO special cases for degenerate
+contact (partially shared edges, vertex-on-edge chains, checkerboard
+corners):
 
 1. Cut the plane into vertical slabs at every vertex x of either
    operand plus every proper A×B edge-crossing x. Inside a slab no two
    edges cross, so the covering edges are totally ordered by their
-   midline y.
+   midline y. All (edge, slab) incidences are evaluated at once in
+   numpy; an edge's y at its own vertex x is that vertex exactly.
 2. Walk each slab bottom-up accumulating even-odd parity for A and B
    separately (holes need no special handling — OGC-valid rings are
-   even-odd compatible); coincident edge groups (shared boundary)
-   toggle both parities at once. The op's indicator (∩, ∪, \\, Δ) over
-   (inA, inB) marks result trapezoids.
+   even-odd compatible); coincident edges (shared boundary) form one
+   group that toggles both parities at once. The op's indicator
+   (∩, ∪, \\, Δ) over (inA, inB) marks result trapezoids.
 3. The result boundary = edge pieces where the indicator flips across
-   an edge, plus the XOR of left/right vertical coverage at each slab
-   border. Pieces chain into closed rings (chain_closed_rings: every
-   junction must have degree 2 — ambiguity refuses), shells/holes
+   a group, plus the XOR of left/right vertical coverage at each slab
+   border. Consecutive pieces cut from the same input edge merge by
+   edge id, so output vertices are input vertices or proper crossings.
+   Each piece is directed with the region on its LEFT, and a planar
+   face walk (_trace_faces) turns the pieces into rings; shells/holes
    recover by containment parity, and the assembled area must match
-   the trapezoid-accumulated area exactly (1e-9 relative) — the same
-   honest gate the rechainer uses. Wrong answers are structurally
-   excluded; failure modes return None.
+   the trapezoid-accumulated area exactly (1e-9 relative). Open parity,
+   an unbalanced or ambiguous junction, or a failed area identity
+   returns None — never a wrong polygon.
 
-Cost: O((V + K)·V) per pair with tiny constants — the same
-dimension-table cost class as the GH fold documented in PLANS.md.
+Cost: O(V + K) slabs, each holding the edges that span it — O(V·(V+K))
+numpy work in the worst case, plus an O(E_A·E_B) vectorized crossing
+scan.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 
 from geomesa_spark.functions import geometry as geo
 
 _OPS = {
-    "intersection": lambda a, b: a and b,
-    "union": lambda a, b: a or b,
-    "difference": lambda a, b: a and not b,
-    "symdifference": lambda a, b: a != b,
+    "intersection": lambda a, b: a & b,
+    "union": lambda a, b: a | b,
+    "difference": lambda a, b: a & ~b,
+    "symdifference": lambda a, b: a ^ b,
 }
 
+_CROSS_CHUNK = 1 << 20  # edge pairs per vectorized crossing block
 
-def _edges(coords, offs):
+
+def _edges(g) -> np.ndarray:
+    """(E, 4) array of x1 y1 x2 y2 over the non-degenerate ring edges."""
+    c = np.asarray(g[1], dtype=np.float64)
+    e = np.concatenate([c[:-1], c[1:]], axis=1)
+    keep = (e[:, 0] != e[:, 2]) | (e[:, 1] != e[:, 3])
+    keep[np.asarray(g[2][1:-1]) - 1] = False  # ring end → next ring start
+    return e[keep]
+
+
+def _crossing_xs(ea: np.ndarray, eb: np.ndarray) -> np.ndarray:
+    """x of every proper crossing between an A edge and a B edge: both
+    edge parameters strictly inside (0, 1), compared as products so no
+    division happens before a hit (parallel and collinear pairs add
+    none: their endpoints already cut the slabs)."""
+    bx1, by1 = eb[:, 0], eb[:, 1]
+    bdx, bdy = eb[:, 2] - bx1, eb[:, 3] - by1
     out = []
-    for r in range(len(offs) - 1):
-        ring = coords[offs[r]:offs[r + 1]]
-        for i in range(len(ring) - 1):
-            p, q = ring[i], ring[i + 1]
-            if p[0] != q[0] or p[1] != q[1]:
-                out.append((float(p[0]), float(p[1]), float(q[0]), float(q[1])))
-    return out
+    step = max(1, _CROSS_CHUNK // len(eb))
+    for s in range(0, len(ea), step):
+        a = ea[s:s + step]
+        x1, y1 = a[:, 0, None], a[:, 1, None]
+        dx, dy = a[:, 2, None] - x1, a[:, 3, None] - y1
+        d = dx * bdy - dy * bdx
+        sg = np.sign(d)
+        ex, ey = bx1 - x1, by1 - y1
+        tn = (ex * bdy - ey * bdx) * sg
+        un = (ex * dy - ey * dx) * sg
+        d *= sg
+        i, j = np.nonzero((tn > 0.0) & (tn < d) & (un > 0.0) & (un < d))
+        out.append(x1[i, 0] + tn[i, j] / d[i, j] * dx[i, 0])
+    return np.concatenate(out)
 
 
-def _crossing_xs(ea, eb):
-    xs = []
-    for x1, y1, x2, y2 in ea:
-        for x3, y3, x4, y4 in eb:
-            if max(x1, x2) < min(x3, x4) or max(x3, x4) < min(x1, x2):
-                continue
-            d = (x2 - x1) * (y4 - y3) - (y2 - y1) * (x4 - x3)
-            if d == 0.0:
-                continue  # parallel/collinear: endpoints are already cuts
-            t = ((x3 - x1) * (y4 - y3) - (y3 - y1) * (x4 - x3)) / d
-            u = ((x3 - x1) * (y2 - y1) - (y3 - y1) * (x2 - x1)) / d
-            if 0.0 < t < 1.0 and 0.0 < u < 1.0:
-                xs.append(x1 + t * (x2 - x1))
-    return xs
+def _seg_cumsum(v: np.ndarray, first: np.ndarray) -> np.ndarray:
+    """Inclusive cumulative sum of ``v`` restarting where ``first``."""
+    c = np.cumsum(v)
+    start = np.maximum.accumulate(np.where(first, np.arange(len(v)), 0))
+    return c - (c - v)[start]
 
 
-def _trace_faces(pieces: list, tol: float):
-    """Closed rings from DIRECTED boundary segments (region on the
-    LEFT of each, known at emission from the parity flips) with
+def _split_loops(ring: list) -> list:
+    """Split a closed node walk at repeated nodes into simple closed
+    loops (a face touching itself at a vertex — a hole pinched onto its
+    shell, two members meeting at a corner — becomes its OGC parts).
+    Loops enclosing no area (fewer than 3 distinct nodes) drop."""
+    loops: list = []
+    stack: list = []
+    pos: dict = {}
+    for p in ring[:-1]:
+        i = pos.get(p)
+        if i is None:
+            pos[p] = len(stack)
+            stack.append(p)
+            continue
+        loops.append(stack[i:] + [p])
+        for q in stack[i + 1:]:
+            del pos[q]
+        del stack[i + 1:]
+    loops.append(stack + stack[:1])
+    return [lp for lp in loops if len(lp) >= 4]
+
+
+def _trace_faces(pieces, tol: float):
+    """Closed rings from DIRECTED boundary segments (region on the LEFT
+    of each, known at emission from the parity flips) with
     even-degree junctions — degree 4 where the operand boundaries
     cross, e.g. every symmetric difference of properly-crossing
-    polygons. The planar face walk over the directed edges (next = the
-    outgoing edge clockwise-adjacent to the arriving edge's reverse)
-    traces exactly the REGION faces: outer boundaries CCW, hole loops
-    CW, void faces between regions never (no edge has them on its
-    left). Containment parity downstream re-derives shells vs holes.
-    Returns None on unbalanced nodes or exact angular ties (ambiguous
-    input — honesty over guessing)."""
-    # neighbor-aware node pooling, NOT bare grid rounding: two endpoints
-    # 1e-12 apart can straddle a grid boundary and round to different
-    # cells (observed: 0.288228115 vs ...1160 → an unbalanced node and a
-    # refused graph). The pool reuses any existing node within tol by
-    # checking the 3x3 neighboring grid cells.
+    polygons. Endpoints pool within ``tol`` (a 3×3 grid-cell lookup,
+    so two points 1e-12 apart never straddle a cell boundary into two
+    nodes); an antiparallel pair of segments bounds a zero-width sliver
+    and cancels. The planar face walk over the directed edges (next =
+    the outgoing edge clockwise-adjacent to the arriving edge's
+    reverse) traces exactly the REGION faces: outer boundaries CCW,
+    hole loops CW, void faces between regions never (no edge has them
+    on its left); repeated nodes then split each face into simple
+    loops. Returns None on an open chain, an unbalanced node or an
+    exact angular tie (ambiguous input — honesty over guessing)."""
     pool: dict = {}
+    seen: dict = {}  # most endpoints repeat bit-exactly: pool each once
 
-    def snap(p):
-        x, y = float(p[0]), float(p[1])
+    def snap(x, y):
+        q = seen.get((x, y))
+        if q is not None:
+            return q
         gx, gy = round(x / tol), round(y / tol)
         for dx in (0, -1, 1):
             for dy in (0, -1, 1):
                 q = pool.get((gx + dx, gy + dy))
                 if q is not None and abs(q[0] - x) <= tol and abs(q[1] - y) <= tol:
+                    seen[(x, y)] = q
                     return q
-        q = (x, y)
-        pool[(gx, gy)] = q
+        q = seen[(x, y)] = pool[(gx, gy)] = (x, y)
         return q
 
-    edges: list = []  # directed (tail_key, head_key)
-    for seg in pieces:
-        a, b = snap(seg[0]), snap(seg[-1])
+    count: dict = {}
+    for (x0, y0), (x1, y1) in pieces:
+        a, b = snap(float(x0), float(y0)), snap(float(x1), float(y1))
         if a != b:
-            edges.append((a, b))
+            count[(a, b)] = count.get((a, b), 0) + 1
+    edges: list = []
+    for (a, b), n in count.items():
+        n -= min(n, count.get((b, a), 0))
+        edges.extend([(a, b)] * n)
     out_at: dict = {}
     in_deg: dict = {}
     for i, (a, b) in enumerate(edges):
@@ -116,14 +162,14 @@ def _trace_faces(pieces: list, tol: float):
     for node, ids in out_at.items():
         if in_deg.get(node, 0) != len(ids):
             return None  # boundary of a region alternates in/out
-        angs = []
-        for i in ids:
-            a, b = edges[i]
-            angs.append((np.arctan2(b[1] - a[1], b[0] - a[0]), i))
-        angs.sort()
+        angs = sorted(
+            (math.atan2(edges[i][1][1] - node[1], edges[i][1][0] - node[0]), i) for i in ids
+        )
         if any(angs[k][0] == angs[k + 1][0] for k in range(len(angs) - 1)):
             return None  # exact angular tie: ambiguous
         order[node] = angs
+    if len(in_deg) != len(out_at):
+        return None  # a node with arrivals and no departures: open chain
     used = [False] * len(edges)
     rings: list = []
     for start in range(len(edges)):
@@ -135,18 +181,14 @@ def _trace_faces(pieces: list, tol: float):
             used[cur] = True
             tail, head = edges[cur]
             ring.append(head)
-            back = np.arctan2(tail[1] - head[1], tail[0] - head[0])
-            angs = order.get(head)
-            if not angs:
-                return None
+            back = math.atan2(tail[1] - head[1], tail[0] - head[0])
+            angs = order[head]
             # outgoing edge immediately CLOCKWISE of `back` in CCW order
-            idx = None
+            idx = len(angs) - 1
             for k, (th, _i) in enumerate(angs):
                 if th >= back:
                     idx = k - 1
                     break
-            if idx is None:
-                idx = len(angs) - 1
             nxt = angs[idx][1]
             if nxt == start:
                 break
@@ -155,8 +197,17 @@ def _trace_faces(pieces: list, tol: float):
             cur = nxt
         else:
             return None
-        rings.append(np.asarray(ring, dtype=np.float64))
-    return rings or None
+        rings.extend(np.asarray(lp, dtype=np.float64) for lp in _split_loops(ring))
+    return rings
+
+
+def _start_at_min(ring: np.ndarray) -> np.ndarray:
+    """Rotate a closed ring to start at its lexicographically smallest
+    vertex (x, then y) — a canonical, deterministic WKT form."""
+    body = ring[:-1]
+    k = int(np.lexsort((body[:, 1], body[:, 0]))[0])
+    body = np.concatenate([body[k:], body[:k]])
+    return np.vstack([body, body[:1]])
 
 
 def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
@@ -164,102 +215,114 @@ def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
     Returns a list of (coords, ring_offsets) members (possibly empty),
     or None when ring assembly or the area identity fails."""
     ind = _OPS[op]
-    ea = _edges(ga[1], ga[2])
-    eb = _edges(gb[1], gb[2])
-    if not ea or not eb:
+    ea, eb = _edges(ga), _edges(gb)
+    if not len(ea) or not len(eb):
         return None
-    xs = sorted(
-        set(
-            [e[0] for e in ea] + [e[2] for e in ea]
-            + [e[0] for e in eb] + [e[2] for e in eb]
-            + _crossing_xs(ea, eb)
+    lo_a, hi_a = ea.reshape(-1, 2).min(axis=0), ea.reshape(-1, 2).max(axis=0)
+    lo_b, hi_b = eb.reshape(-1, 2).min(axis=0), eb.reshape(-1, 2).max(axis=0)
+    if op == "intersection" and ((hi_a < lo_b) | (hi_b < lo_a)).any():
+        return []  # bounding boxes apart: no common point
+    e = np.concatenate([ea, eb])
+    xs = np.unique(np.concatenate([e[:, 0], e[:, 2], _crossing_xs(ea, eb)]))
+
+    # every (edge, slab) incidence of a non-vertical edge, the edge
+    # oriented left to right as (lx, ly, rx, ry)
+    e = np.where((e[:, 0] > e[:, 2])[:, None], e[:, [2, 3, 0, 1]], e)
+    span = np.searchsorted(xs, e[:, [0, 2]])
+    n_slabs = span[:, 1] - span[:, 0]
+    eid = np.repeat(np.arange(len(e)), n_slabs)
+    slab = np.arange(len(eid)) - np.repeat(np.cumsum(n_slabs) - n_slabs - span[:, 0], n_slabs)
+    x0, x1 = xs[slab], xs[slab + 1]
+    lx, ly, rx, ry = e[eid].T
+    # multiply before dividing: a vertex of the other operand lying on
+    # this edge reads back exactly whenever the quotient is representable
+    y0 = np.where(x0 == lx, ly, ly + (x0 - lx) * (ry - ly) / (rx - lx))
+    y1 = np.where(x1 == rx, ry, ly + (x1 - lx) * (ry - ly) / (rx - lx))
+
+    srt = np.lexsort((y1, y0, y0 + y1, slab))
+    slab, eid, y0, y1 = slab[srt], eid[srt], y0[srt], y1[srt]
+    new = np.empty(len(slab) + 1, dtype=bool)
+    new[0] = new[-1] = True
+    new[1:-1] = (slab[1:] != slab[:-1]) | (y0[1:] != y0[:-1]) | (y1[1:] != y1[:-1])
+    bounds = np.flatnonzero(new)  # one group per set of coincident edges
+    gs = bounds[:-1]
+    g_slab, g_y0, g_y1 = slab[gs], y0[gs], y1[gs]
+    na = np.add.reduceat((eid < len(ea)).astype(np.int64), gs)
+    nb = np.diff(bounds) - na
+    carrier = np.minimum.reduceat(eid, gs)
+    sfirst = np.empty(len(gs) + 1, dtype=bool)
+    sfirst[0] = sfirst[-1] = True
+    sfirst[1:-1] = g_slab[1:] != g_slab[:-1]
+    after_a = _seg_cumsum(na & 1, sfirst[:-1]) & 1 == 1
+    after_b = _seg_cumsum(nb & 1, sfirst[:-1]) & 1 == 1
+    if (after_a | after_b)[sfirst[1:]].any():
+        return None  # open parity: numerically inconsistent slab
+    below = ind(after_a ^ (na & 1 == 1), after_b ^ (nb & 1 == 1))
+    above = ind(after_a, after_b)
+
+    # result trapezoids: between group g-1 and g wherever below[g]
+    # (below of a slab's first group is ind(False, False) = False)
+    trap = np.flatnonzero(below)
+    prev = trap - 1
+    t_slab = g_slab[trap]
+    h0, h1 = g_y0[trap] - g_y0[prev], g_y1[trap] - g_y1[prev]
+    area = float(np.sum((xs[t_slab + 1] - xs[t_slab]) * (h0 + h1) / 2.0))
+
+    # boundary on edges: merge runs of consecutive slabs per carrier
+    # edge and direction (region above a left-to-right piece is on its
+    # left)
+    em = np.flatnonzero(below != above)
+    em = em[np.lexsort((g_slab[em], above[em], carrier[em]))]
+    s_em, c_em, fwd = g_slab[em], carrier[em], above[em]
+    run = np.empty(len(em) + 1, dtype=bool)
+    run[0] = run[-1] = True
+    run[1:-1] = (c_em[1:] != c_em[:-1]) | (fwd[1:] != fwd[:-1]) | (s_em[1:] != s_em[:-1] + 1)
+    cut = np.flatnonzero(run)
+    r0, r1 = cut[:-1], cut[1:] - 1
+    pieces = [
+        ((a, b), (c, d)) if f else ((c, d), (a, b))
+        for a, b, c, d, f in zip(
+            xs[s_em[r0]].tolist(), g_y0[em[r0]].tolist(),
+            xs[s_em[r1] + 1].tolist(), g_y1[em[r1]].tolist(), fwd[r0].tolist(),
         )
-    )
-    edge_pieces: list = []          # ((x0,ya0),(x1,ya1)) result boundary on edges
-    vleft: dict = {}                # border x -> intervals approaching from the left slab
-    vright: dict = {}               # border x -> intervals from the right slab
-    area = 0.0
-    for si in range(len(xs) - 1):
-        x0, x1 = xs[si], xs[si + 1]
-        if x1 <= x0:
-            continue
-        groups: dict = {}
-        for (ex1, ey1, ex2, ey2), is_a in (
-            [(e, True) for e in ea] + [(e, False) for e in eb]
-        ):
-            lo, hi = (ex1, ex2) if ex1 < ex2 else (ex2, ex1)
-            if lo > x0 or hi < x1 or lo == hi:
-                continue  # doesn't cover the slab, or vertical
-            s = (ey2 - ey1) / (ex2 - ex1)
-            y0 = ey1 + (x0 - ex1) * s
-            y1 = ey1 + (x1 - ex1) * s
-            g = groups.setdefault((y0, y1), [0, 0])
-            g[0 if is_a else 1] += 1
-        order = sorted(groups.items(), key=lambda kv: kv[0][0] + kv[0][1])
-        in_a = in_b = False
-        prev = None  # (y0, y1) of the last group, if status below..above it True
-        for (y0, y1), (na, nb) in order:
-            below = ind(in_a, in_b)
-            if na % 2:
-                in_a = not in_a
-            if nb % 2:
-                in_b = not in_b
-            above = ind(in_a, in_b)
-            if below != above:
-                # direct the piece with the REGION ON ITS LEFT: region
-                # above a left-to-right edge is on the left
-                if above:
-                    edge_pieces.append(((x0, y0), (x1, y1)))
-                else:
-                    edge_pieces.append(((x1, y1), (x0, y0)))
-            if below and prev is not None:
-                p0, p1 = prev
-                area += (x1 - x0) * ((y0 - p0) + (y1 - p1)) / 2.0
-                if y0 - p0 > tol:
-                    vright.setdefault(x0, []).append((p0, y0))
-                if y1 - p1 > tol:
-                    vleft.setdefault(x1, []).append((p1, y1))
-            prev = (y0, y1) if above else None
-        if in_a or in_b or prev is not None:
-            return None  # open parity: numerically inconsistent slab
-    pieces = [np.asarray(p, dtype=np.float64) for p in edge_pieces]
-    for x in set(vleft) | set(vright):
-        evs: list = []
-        for lo, hi in vleft.get(x, []):
-            evs.append((lo, 1, 0))
-            evs.append((hi, -1, 0))
-        for lo, hi in vright.get(x, []):
-            evs.append((lo, 0, 1))
-            evs.append((hi, 0, -1))
-        evs.sort()
-        cl = cr = 0
-        start = None
-        start_left = False
-        for y, dl, dr in evs:
-            was = (cl % 2) != (cr % 2)
-            cl += dl
-            cr += dr
-            now = (cl % 2) != (cr % 2)
-            if not was and now:
-                start, start_left = y, (cl % 2 == 1)
-            elif was and not now and start is not None:
-                if y - start > tol:
-                    # region-left direction: region on the LEFT slab
-                    # side (x-) → upward; on the right → downward
-                    p = [(x, start), (x, y)] if start_left else [(x, y), (x, start)]
-                    pieces.append(np.asarray(p, dtype=np.float64))
-                start = None
-    if not pieces:
-        return [] if abs(area) <= tol else None
-    rings = geo.chain_closed_rings(pieces, tol=tol)
+    ]
+
+    # boundary on slab borders: XOR of the result's coverage from the
+    # left slab and from the right slab at each border x
+    ls, rs = h0 > tol, h1 > tol
+    if ls.any() or rs.any():
+        lo = np.concatenate([g_y0[prev[ls]], g_y1[prev[rs]]])
+        hi = np.concatenate([g_y0[trap[ls]], g_y1[trap[rs]]])
+        border = np.concatenate([t_slab[ls], t_slab[rs] + 1])
+        # coverage events per border, ordered by y, then left-slab end,
+        # right-slab end, right-slab start, left-slab start (codes 0-3);
+        # ls rows are right-slab coverage, rs rows left-slab coverage
+        n_l, n_r = int(ls.sum()), int(rs.sum())
+        code = np.repeat([2, 3, 1, 0], [n_l, n_r, n_l, n_r])
+        ev_y = np.concatenate([lo, hi])
+        ev_b = np.concatenate([border, border])
+        k = np.lexsort((code, ev_y, ev_b))
+        code, ev_y, ev_b = code[k], ev_y[k], ev_b[k]
+        cl = np.cumsum((code == 3).astype(np.int64) - (code == 0))  # each border sums to zero
+        cr = np.cumsum((code == 2).astype(np.int64) - (code == 1))
+        now = (cl & 1) != (cr & 1)
+        was = np.concatenate([[False], now[:-1]])
+        st, en = np.flatnonzero(now & ~was), np.flatnonzero(was & ~now)
+        keep = (ev_y[en] - ev_y[st]) > tol
+        st, en = st[keep], en[keep]
+        pieces += [
+            ((x, a), (x, b)) if up else ((x, b), (x, a))
+            for x, a, b, up in zip(
+                xs[ev_b[st]].tolist(), ev_y[st].tolist(), ev_y[en].tolist(),
+                (cl[st] & 1 == 1).tolist(),  # region on the left slab: upward
+            )
+        ]
+    rings = _trace_faces(pieces, tol)
     if rings is None:
-        # degree-4 junctions (boundaries crossing at a point — e.g. the
-        # symmetric difference of any two properly-crossing polygons)
-        # are UNAMBIGUOUS for a region boundary: the planar face walk
-        # resolves them deterministically
-        rings = _trace_faces(pieces, tol)
-    if rings is None or not rings:
         return None
+    if not rings:
+        return [] if abs(area) <= tol else None
+    rings = [_start_at_min(r) for r in rings]
     coords = np.concatenate(rings)
     offs = np.concatenate([[0], np.cumsum([len(r) for r in rings])])
     out: list = []
@@ -274,4 +337,5 @@ def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
         out.append((mc, mo))
     if abs(total - area) > 1e-9 * max(1.0, abs(area)):
         return None  # area identity gate: never a wrong polygon
+    out.sort(key=lambda m: (m[0][0, 0], m[0][0, 1]))
     return out

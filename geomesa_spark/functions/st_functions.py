@@ -33,6 +33,7 @@ from pyspark.sql.types import ArrayType, BinaryType, BooleanType, DoubleType, In
 
 from geomesa_spark.functions import cells as C
 from geomesa_spark.functions import geometry as geo
+from geomesa_spark.functions.slab_overlay import slab_boolean
 
 # matches 2-D POINTs and the 2-D projection of POINT Z / M / ZM
 _POINT_NUM = r"POINT\s*(?:ZM|Z|M)?\s*\(\s*(-?[\d.eE+-]+)\s+(-?[\d.eE+-]+)(?:\s+-?[\d.eE+-]+){0,2}\s*\)"
@@ -770,9 +771,8 @@ def _capsule(p, q, r: float, s: int, idx: int) -> np.ndarray:
 def _ring_union_fallback(all_rings: list) -> list | None:
     """Union of hole-free rings for _buffer_geom when _shell_union's GH
     fold refuses (crossing capsules from a self-intersecting polyline):
-    fold pairwise through the full _overlay_union ladder (GH → DE-9IM
-    rechain → slab-sweep boolean), whose every rung is gated by exact
-    area/round-trip identities. Returns a disjoint piece list in
+    fold pairwise through _overlay_union's slab-sweep kernel, gated by
+    exact area/round-trip identities. Returns a disjoint piece list in
     _shell_union's format, or None (honest null)."""
     cur = ("POLYGON", np.asarray(all_rings[0], dtype=np.float64),
            np.asarray([0, len(all_rings[0])]))
@@ -782,10 +782,8 @@ def _ring_union_fallback(all_rings: list) -> list | None:
         if w is None or w.endswith(" EMPTY"):
             return None
         cur = geo.parse_wkt(w)
-    m = _areal_members(*cur)
-    if m is None:
-        return None
-    return [_member_piece(s, h) for s, h in m]
+    # the kernel writes clean members: CCW shell, CW holes
+    return [(c2, o2) for _k, c2, o2 in geo.geom_parts(*cur)]
 
 
 def _buffer_geom(ga, radius: float, segments: int = 8) -> str | None:
@@ -983,9 +981,8 @@ def _buffer_geom(ga, radius: float, segments: int = 8) -> str | None:
     parts = _shell_union([all_rings[0]], all_rings[1:])
     if parts is None:
         # the GH fold refuses crossing capsules (a self-crossing
-        # polyline buffers its own path twice); fold through the full
-        # _overlay_union ladder instead — every rung down to the
-        # slab-sweep boolean is gated by exact identities, so this
+        # polyline buffers its own path twice); fold through the
+        # slab-sweep union instead — gated by exact identities, so this
         # recovers the union or stays honest null, never approximates
         parts = _ring_union_fallback(all_rings)
     if parts is None:
@@ -1224,14 +1221,10 @@ def _overlay_intersection(ga, gb) -> str | None:
     """A ∩ B WKT. Exact for every pairing involving points or linework
     (any polygon shape, holes included), for GEOMETRYCOLLECTION operands
     (disjoint parts intersect independently and concatenate), and for
-    (MULTI)POLYGON pairs, holes included: members decompose pairwise — Sutherland–Hodgman for
-    convex×convex member pairs, Greiner–Hormann for concave members in
-    generic position — and member holes subtract via the region algebra.
-    Degenerate member contact falls back to the DE-9IM fast paths
-    (equal/covered operands answer set-theoretically; touching operands
-    return the shared boundary linework); what neither path supports
-    returns None: SQL null, honest unsupported, never an
-    approximation."""
+    (MULTI)POLYGON pairs, holes and degenerate contact included, through
+    the slab-sweep kernel (_areal_overlay; touching operands return the
+    shared boundary linework). Anything else returns None: SQL null,
+    never an approximation."""
     ka, ca, oa = ga
     kb, cb, ob = gb
     if ka == "GEOMETRYCOLLECTION":
@@ -1291,62 +1284,8 @@ def _overlay_intersection(ga, gb) -> str | None:
             lines.extend(geo.line_clip_polygon(c2, pc, po, True))
         return _pieces_to_wkt([], lines, "GEOMETRYCOLLECTION EMPTY")
     if ka in _AREAL and kb in _AREAL:
-        res = _areal_intersection(ga, gb)
-        if res is None or res == "POLYGON EMPTY":
-            # degenerate contact, or an empty interior overlap that may
-            # still share boundary linework (touching operands)
-            res = _areal_relate_fallback(ga, gb, "intersection") or res
-        if res is None:
-            res = _intersection_via_difference(ga, gb)
-        if res is None:
-            res = _slab_fallback(ga, gb, "intersection")
-        return res
+        return _areal_overlay(ga, gb, "intersection")
     return None
-
-
-def _intersection_via_difference(ga, gb) -> str | None:
-    """Intersection of properly-overlapping areal operands whose direct
-    clip is degenerate: A ∩ B = A \\ (A \\ B). The inner difference
-    survives shared-edge degeneracy via half-plane decomposition; its
-    result is covered by A, so the outer difference takes the
-    covered-B boundary-rechain path — which is gated by the exact area
-    identity, so this recovers exact answers or None, never wrong ones.
-    Both operand orders are tried."""
-    for x, y in ((ga, gb), (gb, ga)):
-        d = _overlay_difference(x, y)
-        if d is None:
-            continue
-        if d.endswith(" EMPTY"):
-            return geo.wkt_any(*x)  # x ⊆ y → x ∩ y = x
-        gd = geo.parse_wkt(d)
-        if gd[0] not in _AREAL:
-            continue
-        out = _overlay_difference(x, gd)
-        if out is not None:
-            return out
-    return None
-
-
-def _areal_intersection(ga, gb) -> str | None:
-    """(sa \\ ha) ∩ (sb \\ hb) == (sa ∩ sb) \\ ha \\ hb per member pair;
-    members of each side are disjoint, so the pairwise results are
-    mutually disjoint and concatenate into one (MULTI)POLYGON."""
-    ma = _areal_members(*ga)
-    mb = _areal_members(*gb)
-    if ma is None or mb is None:
-        return None
-    out: list = []
-    for sa, ha in ma:
-        for sb, hb in mb:
-            d = _ring_pair_intersection(sa, sb)
-            if d is None:
-                return None
-            for h in ha + hb:
-                d = _region_subtract_ring(d, h)
-                if d is None:
-                    return None
-            out.extend(d)
-    return _polys_to_wkt(out)
 
 
 def _gc_combine(members: list, empty: str = "GEOMETRYCOLLECTION EMPTY") -> str:
@@ -1368,79 +1307,14 @@ def _gc_parts_interior_disjoint(parts: list) -> bool:
         ki, ci, oi = parts[i]
         for j in range(i + 1, len(parts)):
             kj, cj, oj = parts[j]
-            if ki != "POINT" and kj != "POINT":
-                # cheap bbox reject before the O(n·m) relate
-                if (
-                    ci[:, 0].max() < cj[:, 0].min() or cj[:, 0].max() < ci[:, 0].min()
-                    or ci[:, 1].max() < cj[:, 1].min() or cj[:, 1].max() < ci[:, 1].min()
-                ):
-                    continue
+            if ki != "POINT" and kj != "POINT" and _bbox_disjoint(ci, cj):
+                continue  # cheap bbox reject before the O(n·m) relate
             try:
                 if geo.relate_geoms(ki, ci, oi, kj, cj, oj).ii:
                     return False
             except Exception:
                 return False
     return True
-
-
-def _clean_ring(ring) -> np.ndarray | None:
-    """Canonicalize a ring for the region algebra: drop consecutive
-    duplicate vertices and collapse exact zero-width backtrack spikes
-    (v[k-1] == v[k+1] — the doubled edge toggles even-odd parity twice,
-    so removal is point-set EXACT, not an approximation); None when
-    fewer than 3 distinct vertices remain (such a ring encloses exactly
-    zero area). Upstream overlays can emit both artifacts under
-    degenerate contact — observed: a sliver ((0 7, 8.9e-16 7, 0 7))
-    from an intersection, and a hole-union ring threading a nested
-    hole's corners via a spike ((-0.5 0.5, -0.5 0, -0.5 0.5)) that made
-    the downstream intersect kernel answer EMPTY instead of the patch
-    region — and the ring-pair kernels choke on zero-length and doubled
-    edges."""
-    ring = np.asarray(ring, dtype=np.float64)
-    body = ring[:-1] if len(ring) > 1 and (ring[0] == ring[-1]).all() else ring
-    changed = True
-    while changed and len(body) >= 3:
-        changed = False
-        n = len(body)
-        keep = np.ones(n, dtype=bool)
-        for k in range(n):
-            if (body[k] == body[(k + 1) % n]).all():
-                keep[(k + 1) % n] = False
-        if not keep.all():
-            body = body[keep]
-            changed = True
-            continue
-        for k in range(n):
-            if (body[(k - 1) % n] == body[(k + 1) % n]).all():
-                body = np.delete(body, sorted({k, (k + 1) % n}, reverse=True), axis=0)
-                changed = True
-                break
-    if len(body) < 3 or len(np.unique(body, axis=0)) < 3:
-        return None
-    return np.vstack([body, body[:1]])
-
-
-def _areal_members(kind, coords, offs) -> list | None:
-    """(MULTI)POLYGON members as (shell_ring, [hole_ring, ...]) with all
-    rings closed, consecutive-duplicate-free, and CCW-normalized; None
-    for non-polygonal parts. Members with a degenerate (<3 distinct
-    vertices ⇒ exactly zero area) shell are dropped, as are degenerate
-    hole rings."""
-    out = []
-    for k2, c2, o2 in geo.geom_parts(kind, coords, offs):
-        if k2 != "POLYGON":
-            return None
-        shell = _clean_ring(c2[o2[0]:o2[1]])
-        if shell is None:
-            continue
-        shell = geo._ccw_ring(shell)
-        holes = []
-        for i in range(1, len(o2) - 1):
-            h = _clean_ring(c2[o2[i]:o2[i + 1]])
-            if h is not None:
-                holes.append(geo._ccw_ring(h))
-        out.append((shell, holes))
-    return out
 
 
 def _member_piece(shell, holes) -> tuple[np.ndarray, np.ndarray]:
@@ -1461,13 +1335,14 @@ def _piece_holes(c2, o2) -> list[np.ndarray]:
 # --- exact region algebra over disjoint piece lists --------------------------
 #
 # A "region" is a list of mutually disjoint (coords, ring_offsets) polygon
-# pieces (shell + parity holes). The three primitives below reduce every
-# holed-operand overlay to single-ring kernel calls via set identities:
+# pieces (shell + parity holes). _buffer_geom carves with the primitives
+# below, which reduce holed pieces to single-ring kernel calls via set
+# identities:
 #   (shell \ holes) \ r  ==  (shell \ r) \ holes
 #   (shell \ holes) ∩ r  ==  (shell ∩ r) \ holes
 #   X \ (sb \ ⊎hb)       ==  (X \ sb) ⊎ ⊎ᵢ (X ∩ hbᵢ)
 # Each returns None on degenerate boundary contact the ring-pair kernels
-# cannot trace (the caller falls back to the DE-9IM fast paths).
+# cannot trace.
 
 
 def _region_subtract_ring(pieces, r, pair_diff=None) -> list | None:
@@ -1654,174 +1529,57 @@ def _areal_area(coords, offs) -> float:
     return total
 
 
-def _boundary_rechain(ga, gb, expected_area: float) -> str | None:
-    """Rebuild an overlay result whose interior structure is trivially
-    known (interiors disjoint for a touching union; B filling part of A
-    for a covered difference) from its boundary: collinear shared
-    portions cancel from BOTH operands (a shared edge becomes interior),
-    the surviving arcs re-chain into closed rings, and containment-depth
-    parity recovers shells and holes. The rechained area must reproduce
-    the set-theoretically expected area or the result is rejected —
-    None, never an approximation."""
-    ka, ca, oa = ga
-    kb, cb, ob = gb
-    rings_a = [np.asarray(ca[oa[i]:oa[i + 1]], dtype=np.float64) for i in range(len(oa) - 1)]
-    rings_b = [np.asarray(cb[ob[i]:ob[i + 1]], dtype=np.float64) for i in range(len(ob) - 1)]
-    pieces: list = []
-    for side, other in ((rings_a, rings_b), (rings_b, rings_a)):
-        for r in side:
-            cur = [r]
-            for o2 in other:
-                cur = [seg for p in cur for seg in geo.line_difference_line(p, o2)]
-            pieces.extend(cur)
-    rings = geo.chain_closed_rings(pieces)
-    if rings is None:
-        return None
-    if not rings:
-        return "POLYGON EMPTY" if abs(expected_area) <= 1e-15 else None
-    coords = np.concatenate(rings)
-    offs = np.concatenate([[0], np.cumsum([len(r) for r in rings])])
-    out: list = []
-    total = 0.0
-    for shell_idx, hole_idxs in geo.multipolygon_parts(coords, offs):
-        member = [geo._ccw_ring(rings[shell_idx])] + [
-            geo._ccw_ring(rings[h])[::-1] for h in hole_idxs
-        ]
-        mc = np.concatenate(member)
-        mo = np.concatenate([[0], np.cumsum([len(r) for r in member])])
-        total += geo.polygon_area_deg2(mc, mo)  # CCW shell + CW holes: net
-        out.append((mc, mo))
-    if abs(total - expected_area) > 1e-9 * max(1.0, abs(expected_area)):
-        return None
-    return _wkt_roundtrip_gate(out, expected_area)
-
-
-def _wkt_roundtrip_gate(parts, expected_area: float) -> str | None:
-    """Emit WKT only if the artifact a consumer PARSES BACK reproduces
-    the expected net area. The %.10g writer rounds coordinates
+def _wkt_roundtrip_gate(parts) -> str | None:
+    """Emit WKT only if the artifact a consumer PARSES BACK keeps the
+    written structure. The %.10g writer rounds coordinates
     ~1e-10-relative — normally invisible, but a sliver ring sitting
     exactly on another ring's boundary can flip its containment depth
     under that rounding (observed: a 0.02-area island inside a hole
     re-reading as a hole of the outer shell, silently subtracting twice).
-    A result that is not structure-stable through the writer is refused
-    — None, never a wrong polygon."""
+    The parsed rings' containment-derived net area must equal their
+    written shell-minus-holes area; both come from the same rounded
+    coordinates, so rounding alone never refuses a result. A result that
+    is not structure-stable through the writer is refused — None, never
+    a wrong polygon."""
     w = _polys_to_wkt(parts)
-    if w is None or w.endswith(" EMPTY"):
-        return w
+    if sum(len(o) - 1 for _c, o in parts) < 2:
+        return w  # a lone ring has no containment depth to flip
     _k2, c2, o2 = geo.parse_wkt(w)
-    if abs(_areal_area(c2, o2) - expected_area) > 1e-9 * max(1.0, abs(expected_area)):
+    ring_area = [abs(geo.ring_signed_area(c2[o2[i]:o2[i + 1]])) for i in range(len(o2) - 1)]
+    written, first = 0.0, 0
+    for _c, o in parts:
+        written += ring_area[first] - sum(ring_area[first + 1:first + len(o) - 1])
+        first += len(o) - 1
+    if abs(_areal_area(c2, o2) - written) > 1e-9 * max(1.0, abs(written)):
         return None
     return w
 
 
-def _slab_fallback(ga, gb, op: str) -> str | None:
-    """Last-resort degenerate-contact overlay: the slab-sweep boolean
-    (functions/slab_overlay.py — trapezoidal even-odd decomposition, no
-    degeneracy special cases, area-identity gated so it can only return
-    the exact region or None). An EMPTY intersection result stays None:
-    a touching pair's true intersection may be boundary LINEWORK, which
-    the slab sweep (areal by construction) cannot see — the relate
-    fallback earlier in the chain owns that case."""
-    if ga[0] not in _AREAL or gb[0] not in _AREAL:
-        return None
-    from geomesa_spark.functions.slab_overlay import slab_boolean
-
+def _areal_overlay(ga, gb, op: str) -> str | None:
+    """(MULTI)POLYGON × (MULTI)POLYGON boolean ``op``: the slab-sweep
+    kernel (functions/slab_overlay.py — trapezoidal even-odd
+    decomposition, no degeneracy special cases, area-identity gated)
+    behind the WKT round-trip gate, so the answer is the exact region
+    or None. An empty intersection may still be boundary LINEWORK,
+    which the areal sweep cannot see: touching operands return the
+    LINESTRING × LINESTRING intersection of their rings, disjoint ones
+    POLYGON EMPTY."""
     out = slab_boolean(ga, gb, op)
     if out is None:
         return None
-    if not out:
-        return None if op == "intersection" else "POLYGON EMPTY"
-    net = sum(geo.polygon_area_deg2(mc, mo) for mc, mo in out)
-    return _wkt_roundtrip_gate(out, net)
+    if out:
+        return _wkt_roundtrip_gate(out)
+    if op != "intersection" or _bbox_disjoint(ga[1], gb[1]):
+        return "POLYGON EMPTY"
+    w = _overlay_intersection(("MULTILINESTRING", ga[1], ga[2]), ("MULTILINESTRING", gb[1], gb[2]))
+    return "POLYGON EMPTY" if w == "GEOMETRYCOLLECTION EMPTY" else w
 
 
-def _union_via_difference(ga, gb) -> str | None:
-    """Union of PROPERLY-OVERLAPPING areal operands whose direct GH fold
-    is degenerate (partially shared edges — e.g. two rectangles sharing
-    part of an edge while overlapping): A ∪ B = rechain(A, B \\ A).
-    B \\ A survives the degeneracy through the difference kernel's
-    half-plane decomposition (exact incl. shared edges for convex
-    members), its pieces touch A by construction (interiors disjoint),
-    and the touching-union rechainer is gated by the exact area identity
-    area(A) + area(B \\ A) = area(A ∪ B) — so this can only return the
-    right polygon or None, never a wrong one. Both operand orders are
-    tried; measured effect in BENCH/overlay_null_rate.json."""
-    for x, y in ((ga, gb), (gb, ga)):
-        d = _overlay_difference(y, x)
-        if d is None:
-            continue
-        if d.endswith(" EMPTY"):
-            return geo.wkt_any(*x)
-        gd = geo.parse_wkt(d)
-        if gd[0] not in _AREAL:
-            continue
-        out = _boundary_rechain(
-            x, gd, _areal_area(x[1], x[2]) + _areal_area(gd[1], gd[2])
-        )
-        if out is not None:
-            return out
-    return None
-
-
-def _areal_relate_fallback(ga, gb, op: str) -> str | None:
-    """Exact answers for (MULTI)POLYGON pairs the crossing-based kernels
-    reject as degenerate, recovered from the DE-9IM relationship: equal
-    and covered operands answer set-theoretically; interiors-disjoint
-    (touches) intersections return the shared boundary linework;
-    touching unions and covered differences rebuild by boundary
-    rechaining. Anything else stays None — honest unsupported."""
-    ka, ca, oa = ga
-    kb, cb, ob = gb
-    if ka not in _AREAL or kb not in _AREAL:
-        return None
-    # cheap reject: bbox-disjoint operands can't touch (the fallback
-    # fires for every empty intersection, which is usually just two
-    # far-apart polygons — skip the O(n·m) relate for those)
-    if (
+def _bbox_disjoint(ca, cb) -> bool:
+    return bool(
         ca[:, 0].max() < cb[:, 0].min() or cb[:, 0].max() < ca[:, 0].min()
         or ca[:, 1].max() < cb[:, 1].min() or cb[:, 1].max() < ca[:, 1].min()
-    ):
-        return None
-    try:
-        r = geo.relate_geoms(ka, ca, oa, kb, cb, ob)
-    except Exception:
-        return None
-    if geo.pred_equals(r):
-        return "POLYGON EMPTY" if op == "difference" else geo.wkt_any(ka, ca, oa)
-    if geo.pred_covered_by(r):  # A ⊆ B
-        if op == "intersection":
-            return geo.wkt_any(ka, ca, oa)
-        if op == "union":
-            return geo.wkt_any(kb, cb, ob)
-        return "POLYGON EMPTY"  # areal difference of a covered subject
-    if geo.pred_covers(r):  # B ⊆ A
-        if op == "intersection":
-            return geo.wkt_any(kb, cb, ob)
-        if op == "union":
-            return geo.wkt_any(ka, ca, oa)
-        return _boundary_rechain(ga, gb, _areal_area(ca, oa) - _areal_area(cb, ob))
-    if geo.pred_touches(r):  # interiors disjoint, boundaries meet
-        if op == "difference":
-            return geo.wkt_any(ka, ca, oa)
-        if op == "union":
-            return _boundary_rechain(ga, gb, _areal_area(ca, oa) + _areal_area(cb, ob))
-        # intersection: the shared boundary linework (segments + isolated
-        # touch points, points on any segment subsumed)
-        pts: list = []
-        lines: list = []
-        for i in range(len(oa) - 1):
-            for j in range(len(ob) - 1):
-                p2, s2 = geo.line_line_overlay(ca[oa[i]:oa[i + 1]], cb[ob[j]:ob[j + 1]])
-                pts.extend(p2)
-                lines.extend(s2)
-        if lines:
-            ex1 = np.asarray([s[0, 0] for s in lines])
-            ey1 = np.asarray([s[0, 1] for s in lines])
-            ex2 = np.asarray([s[1, 0] for s in lines])
-            ey2 = np.asarray([s[1, 1] for s in lines])
-            pts = [p for p in pts if not geo.points_on_segments([p[0]], [p[1]], ex1, ey1, ex2, ey2)[0]]
-        return _pieces_to_wkt(pts, lines, "GEOMETRYCOLLECTION EMPTY")
-    return None
+    )
 
 
 def _ring_pair_intersection(a2, b2) -> list | None:
@@ -1883,15 +1641,9 @@ def _overlay_difference(ga, gb) -> str | None:
     """A \\ B WKT. GEOMETRYCOLLECTION subjects subtract per-part;
     a GEOMETRYCOLLECTION B subtracts its parts sequentially. Subtracting
     a lower-dimension geometry is identity; point and line subjects are
-    exact for any B. Areal subjects,
-    holes included: B's members subtract sequentially from each A
-    member's pieces via the region algebra (half-plane decomposition
-    for convex pairs — exact incl. shared edges — Greiner–Hormann for
-    concave pairs in generic position; a B hole adds back the part of A
-    it exposes). Degenerate contact falls back to the DE-9IM fast paths
-    (covered subjects are empty; a covered B rebuilds A \\ B by
-    boundary rechaining; touching operands subtract nothing).
-    Interactions neither path can express return None."""
+    exact for any B. (MULTI)POLYGON pairs, holes and degenerate contact
+    included, go through the slab-sweep kernel (_areal_overlay), which
+    returns the exact region or None."""
     ka, ca, oa = ga
     kb, cb, ob = gb
     dim = {"POINT": 0, "MULTIPOINT": 0, "LINESTRING": 1, "MULTILINESTRING": 1, "POLYGON": 2, "MULTIPOLYGON": 2}
@@ -1947,62 +1699,7 @@ def _overlay_difference(ga, gb) -> str | None:
                 pieces = [seg for p in pieces for seg in geo.line_difference_line(p, b2)]
             lines.extend(pieces)
         return _pieces_to_wkt([], lines, "GEOMETRYCOLLECTION EMPTY")
-    res = _areal_difference(ga, gb)
-    if res is None:
-        res = _areal_relate_fallback(ga, gb, "difference")
-    if res is None:
-        res = _slab_fallback(ga, gb, "difference")
-    return res
-
-
-def _areal_difference(ga, gb) -> str | None:
-    """A \\ B for (MULTI)POLYGON operands, holes included: each A member
-    starts as one piece (shell + holes) and B's members subtract
-    sequentially via the region algebra (a B hole adds back the part of
-    A it exposes)."""
-    ma = _areal_members(*ga)
-    mb = _areal_members(*gb)
-    if ma is None or mb is None:
-        return None
-    out: list = []
-    for sa, ha in ma:
-        cur: list | None = [_member_piece(sa, ha)]
-        for sb, hb in mb:
-            cur = _region_subtract_member(cur, sb, hb)
-            if cur is None:
-                return None
-        out.extend(cur)
-    if not _pieces_interior_disjoint(out):
-        # deep degenerate member chains can drive the pair kernels into
-        # emitting overlapping sliver pieces without any step nulling
-        # (round-5 MC audit: duplicated zero-area parts + a piece
-        # holed by its own fp-noise twin). The region-algebra invariant
-        # is a DISJOINT piece list — enforce it as an exact output gate
-        # and fall back to the rechain/slab rungs instead of shipping
-        # junk.
-        return None
-    return _polys_to_wkt(out)
-
-
-def _pieces_interior_disjoint(pieces: list) -> bool:
-    """True when no two pieces of a region list share interior points
-    (bbox prefilter + exact relate ii). The region algebra's invariant;
-    violated output means a kernel mis-traced a degenerate contact."""
-    for x in range(len(pieces)):
-        cx, ox = pieces[x]
-        for y in range(x + 1, len(pieces)):
-            cy, oy = pieces[y]
-            if (
-                cx[:, 0].max() < cy[:, 0].min() or cy[:, 0].max() < cx[:, 0].min()
-                or cx[:, 1].max() < cy[:, 1].min() or cy[:, 1].max() < cx[:, 1].min()
-            ):
-                continue
-            try:
-                if geo.relate_geoms("POLYGON", cx, ox, "POLYGON", cy, oy).ii:
-                    return False
-            except Exception:
-                return False
-    return True
+    return _areal_overlay(ga, gb, "difference")
 
 
 def _piece_contact(c2, o2, b2) -> str:
@@ -2031,39 +1728,22 @@ def _piece_contact(c2, o2, b2) -> str:
     )
     if proper.any() or overlap.any():
         return "interacting"
+    b_off = np.asarray([0, len(b)])
     sx = b[:-1, 0]
     sy = b[:-1, 1]
     if touch.any():
         # b2 can thread THROUGH the piece between touch points
         # (corner-to-corner slicing), and a touch point can BE an edge
-        # midpoint — so per touching edge, sample the midpoint of every
-        # interval between consecutive contact parameters (piece
-        # vertices on the edge, plus the endpoints). Every sample lies
-        # on b2's boundary by construction, so extra samples are always
-        # sound; missing ones are what made a slicing edge read
-        # 'disjoint'.
-        ex, ey = [], []
+        # midpoint — so sample every b2 edge midpoint, plus the midpoint
+        # of every interval between consecutive piece vertices lying on
+        # a b2 edge. Every sample lies on b2's boundary, so extra
+        # samples are always sound; missing ones are what made a
+        # slicing edge read 'disjoint'.
         pv = c[np.concatenate([np.arange(o2[r], o2[r + 1] - 1) for r in range(len(o2) - 1)])]
-        for e in range(len(b) - 1):
-            p, q = b[e], b[e + 1]
-            d = q - p
-            l2 = float(d @ d)
-            if l2 == 0.0:
-                continue
-            vx = pv[:, 0] - p[0]
-            vy = pv[:, 1] - p[1]
-            crs = d[0] * vy - d[1] * vx
-            t = (vx * d[0] + vy * d[1]) / l2
-            on = (np.abs(crs) < 1e-12 * np.sqrt(l2)) & (t > 1e-12) & (t < 1 - 1e-12)
-            ts = sorted({0.0, 1.0, *np.round(t[on], 15).tolist()})
-            for a0, a1 in zip(ts[:-1], ts[1:]):
-                tm = (a0 + a1) / 2.0
-                ex.append(p[0] + tm * d[0])
-                ey.append(p[1] + tm * d[1])
-        sx = np.concatenate([sx, np.asarray(ex)])
-        sy = np.concatenate([sy, np.asarray(ey)])
+        ex, ey = geo._contact_interval_samples(b, b_off, pv)
+        sx = np.concatenate([sx, (b[:-1, 0] + b[1:, 0]) / 2.0, ex])
+        sy = np.concatenate([sy, (b[:-1, 1] + b[1:, 1]) / 2.0, ey])
     cls = geo.classify_points_in_polygon(sx, sy, c2, o2)
-    b_off = np.asarray([0, len(b)])
 
     def _piece_in_b2() -> bool:
         # majority vote over the piece's shell vertices AND edge
@@ -2092,18 +1772,12 @@ def _piece_contact(c2, o2, b2) -> str:
 
 def _overlay_union(ga, gb) -> str | None:
     """A ∪ B WKT for same-dimension operands: point sets merge,
-    linework merges as A + (B \\ A), (MULTI)POLYGON members merge
-    member-by-member, holes included — disjoint members concatenate,
-    interactions union via Greiner–Hormann (interlocking shapes
-    correctly enclose voids; a member spanning several parts merges
-    them transitively), interior members absorb, and operand holes are
-    carved exactly by the region algebra. Degenerate polygon contact
-    falls back to the DE-9IM fast paths (equal/covered operands answer
-    set-theoretically; edge-adjacent operands merge by boundary
-    rechaining; point-touching operands concatenate). Mixed-dimension
-    unions return GEOMETRYCOLLECTION(higher, lower \\ higher) — JTS
-    semantics — and GEOMETRYCOLLECTION operands re-union canonically by
-    dimension (_gc_union). What neither path supports returns None."""
+    linework merges as A + (B \\ A), and (MULTI)POLYGON pairs, holes
+    and degenerate contact included, go through the slab-sweep kernel
+    (_areal_overlay). Mixed-dimension unions return
+    GEOMETRYCOLLECTION(higher, lower \\ higher) — JTS semantics — and
+    GEOMETRYCOLLECTION operands re-union canonically by dimension
+    (_gc_union). Anything unsupported returns None."""
     ka, ca, oa = ga
     kb, cb, ob = gb
     if ka in _POINTY and kb in _POINTY:
@@ -2121,14 +1795,7 @@ def _overlay_union(ga, gb) -> str | None:
             lines.extend(pieces)
         return _pieces_to_wkt([], lines, "GEOMETRYCOLLECTION EMPTY")
     if ka in _AREAL and kb in _AREAL:
-        res = _areal_union(ga, gb)
-        if res is None:
-            res = _areal_relate_fallback(ga, gb, "union")
-        if res is None:
-            res = _union_via_difference(ga, gb)
-        if res is None:
-            res = _slab_fallback(ga, gb, "union")
-        return res
+        return _areal_overlay(ga, gb, "union")
     # mixed dimensions (JTS semantics): the lower-dim operand survives
     # only outside the higher-dim one — GEOMETRYCOLLECTION(high, low \ high)
     dim = {"POINT": 0, "MULTIPOINT": 0, "LINESTRING": 1, "MULTILINESTRING": 1,
@@ -2165,7 +1832,7 @@ def _gc_normalized(g) -> tuple | None:
     becomes sound on it — this turns the former
     GC-with-overlapping-members honest-null class into exact answers
     wherever the union kernels are exact. None when a member union is
-    itself unsupported (degenerate contact the rechainer refuses)."""
+    itself unsupported."""
     w = _parts_canonical_union(geo.geom_parts(*g))
     if w is None or w.endswith(" EMPTY"):
         return None
@@ -2262,62 +1929,6 @@ def _shell_union(ra: list, rb: list) -> list | None:
     return parts
 
 
-def _areal_union(ga, gb) -> str | None:
-    """(MULTI)POLYGON ∪ (MULTI)POLYGON, holes included. Shells merge via
-    _shell_union; the union's holes are then carved exactly: a point
-    inside the shell union misses A ∪ B iff it sits in an A-hole
-    uncovered by A's other members and by B (pieces h \\ othersA \\ B,
-    where subtracting a B member adds back its own holes' overlap — the
-    h ∩ hb case), or outside every A shell inside a B-hole uncovered by
-    B's other members (pieces h' \\ othersB \\ ⊎sa — shell-only
-    subtraction so the A-loop's h ∩ hb pieces are never
-    double-subtracted). The cases partition, so the carved pieces are
-    disjoint."""
-    ma = _areal_members(*ga)
-    mb = _areal_members(*gb)
-    if ma is None or mb is None:
-        return None
-    parts = _shell_union([s for s, _ in ma], [s for s, _ in mb])
-    if parts is None:
-        return None
-    if not any(h for _, h in ma) and not any(h for _, h in mb):
-        return _polys_to_wkt(parts)
-    res: list | None = parts
-    for i, (_sa, ha) in enumerate(ma):
-        for h in ha:
-            hp: list | None = [(h, np.asarray([0, len(h)]))]
-            for k2, (sa2, ha2) in enumerate(ma):
-                if k2 == i:
-                    continue
-                hp = _region_subtract_member(hp, sa2, ha2)
-                if hp is None:
-                    return None
-            for sb, hb in mb:
-                hp = _region_subtract_member(hp, sb, hb)
-                if hp is None:
-                    return None
-            res = _region_subtract_pieces(res, hp)
-            if res is None:
-                return None
-    for j, (_sb, hb) in enumerate(mb):
-        for h in hb:
-            hp = [(h, np.asarray([0, len(h)]))]
-            for k2, (sb2, hb2) in enumerate(mb):
-                if k2 == j:
-                    continue
-                hp = _region_subtract_member(hp, sb2, hb2)
-                if hp is None:
-                    return None
-            for sa, _ha in ma:
-                hp = _region_subtract_ring(hp, sa)
-                if hp is None:
-                    return None
-            res = _region_subtract_pieces(res, hp)
-            if res is None:
-                return None
-    return _polys_to_wkt(res)
-
-
 def _null_on_error(fn):
     """Overlay dispatchers reject unsupported pairings by returning None;
     this converts any residual exception on an exotic input to the same
@@ -2334,78 +1945,27 @@ def _null_on_error(fn):
 
 
 def _overlay_symdifference(ga, gb) -> str | None:
-    """A Δ B, preferring (A ∪ B) \\ (A ∩ B) — it yields the structurally
-    cleanest result (no internal member fragmentation; a lower-dim
-    intersection subtracts as identity). Falls back to
-    (A \\ B) ∪ (B \\ A), whose differences have disjoint interiors so
-    the union only exercises the disjoint/touching paths. Exact wherever
-    the underlying overlays are; None otherwise."""
-    def _parity_area(w: str) -> float | None:
-        # sum of areal parts — a GEOMETRYCOLLECTION result (areal part
-        # + shared-boundary linework) has real area; treating it as 0
-        # made the gate reject CORRECT mixed-dimension results
-        if w.endswith(" EMPTY"):
-            return 0.0
-        tot = 0.0
-        for k2, c2, o2 in geo.geom_parts(*geo.parse_wkt(w)):
-            if k2 == "POLYGON":
-                tot += float(_areal_area(c2, o2))
-        return tot
-
-    def _area_ok(w: str, want: float | None) -> bool:
-        # EXACT identity gate: deep degenerate inputs can drive a
-        # crossing kernel into emitting overlapping sliver pieces that
-        # are wrong but non-null (round-5 MC audit: a holed_snapped
-        # pair's u \ i read 72.74 vs the true 68.69) — the identity
-        # catches them and the dispatcher falls through to the next
-        # composition instead of shipping the junk.
-        if want is None:
-            return True
-        got = _parity_area(w)
-        return got is not None and abs(got - want) <= 1e-9 * max(1.0, abs(want))
-
-    u = _overlay_union(ga, gb)
-    i = _overlay_intersection(ga, gb)
-    if u is not None and i is not None:
-        if i.endswith(" EMPTY"):
-            return u
-        gu_, gi_ = geo.parse_wkt(u), geo.parse_wkt(i)
-        au, ai = _parity_area(u), _parity_area(i)
-        want = au - ai if au is not None and ai is not None else None
-        # i ⊆ u, so the areal gap is exactly au − ai (any result kind)
-        d = _overlay_difference(gu_, gi_)
-        if d is not None and _area_ok(d, want):
-            return d
+    """A Δ B. (MULTI)POLYGON pairs go straight to the slab kernel; every
+    other pairing composes (A \\ B) ∪ (B \\ A), whose two differences
+    have disjoint interiors. Exact wherever the underlying overlays are;
+    None otherwise."""
+    if ga[0] in _AREAL and gb[0] in _AREAL:
+        return _areal_overlay(ga, gb, "symdifference")
     d1 = _overlay_difference(ga, gb)
-    if d1 is None:
-        return _slab_fallback(ga, gb, "symdifference")
     d2 = _overlay_difference(gb, ga)
-    if d2 is None:
-        return _slab_fallback(ga, gb, "symdifference")
-    e1 = d1.endswith(" EMPTY")
-    e2 = d2.endswith(" EMPTY")
-    if e1 and e2:
+    if d1 is None or d2 is None:
+        return None
+    if d2.endswith(" EMPTY"):
         return d1
-    if e1:
+    if d1.endswith(" EMPTY"):
         return d2
-    if e2:
-        return d1
-    out = _overlay_union(geo.parse_wkt(d1), geo.parse_wkt(d2))
-    if out is not None:
-        # the two differences have disjoint interiors: exact additivity
-        w1, w2 = _parity_area(d1), _parity_area(d2)
-        if w1 is not None and w2 is not None and not _area_ok(out, w1 + w2):
-            out = None
-    if out is None:
-        out = _slab_fallback(ga, gb, "symdifference")
-    return out
+    return _overlay_union(geo.parse_wkt(d1), geo.parse_wkt(d2))
 
 
 @F.pandas_udf(StringType())
 def st_symDifference(a_wkt: pd.Series, b_wkt: pd.Series) -> pd.Series:
-    """Symmetric difference — exact wherever st_difference and the
-    touching-union rechain are (null, never an approximation, outside
-    them)."""
+    """Symmetric difference — see _overlay_symdifference (null, never an
+    approximation, outside the supported pairings)."""
     return pd.Series(_per_unique_pair(a_wkt, b_wkt, _null_on_error(_overlay_symdifference)))
 
 

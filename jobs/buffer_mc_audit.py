@@ -11,7 +11,7 @@ convention the kernel documents). Erosion: probe ∈ erode(P, r) ⟺
 probe ∈ P and dist(probe, ∂P) > |r|, same band. A None result counts as
 an honest null, never a mismatch.
 
-Pure numpy — no Spark. Writes BENCH/buffer_mc_audit.json.
+Pure numpy — no Spark. Writes BENCH/buffer_mc_audit.json with provenance.
 
     python jobs/buffer_mc_audit.py [N_PER_CLASS] [PROBES_PER_INPUT]
 """
@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import time
 
 import numpy as np
 
@@ -28,7 +29,8 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 
 from geomesa_spark.functions import geometry as geo  # noqa: E402
 from geomesa_spark.functions import st_functions as sf  # noqa: E402
-from jobs.overlay_null_rate import _holed_polygon  # noqa: E402
+from jobs.overlay_null_rate import SEED, _holed_polygon  # noqa: E402
+from jobs.provenance import provenance  # noqa: E402
 
 S = 8
 # the kernel's documented chord error bound: phase-jittered first/last
@@ -118,7 +120,8 @@ def gen_input(rng, cls) -> str | None:
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 200
     n_probes = int(sys.argv[2]) if len(sys.argv) > 2 else 512
-    rng = np.random.default_rng(20260818)
+    t0 = time.perf_counter()
+    rng = np.random.default_rng(SEED)
     report: dict = {}
     examples: list = []
     classes = (
@@ -184,6 +187,7 @@ def main() -> None:
         report[cls] = row
     here = os.path.dirname(os.path.abspath(__file__))
     out = {
+        "provenance": provenance(n, SEED, probes_per_input=n_probes, wall_s=round(time.perf_counter() - t0, 1)),
         "n_per_class": n,
         "probes_per_input": n_probes,
         "classes": report,

@@ -14,7 +14,9 @@ the result are excluded, matching tests/test_overlay_holes.py's
 estimator). A mismatch is a reproducible wrong answer, printed with the
 operand WKTs and the probe.
 
-Pure numpy — no Spark. Writes BENCH/overlay_mc_audit.json.
+Pure numpy — no Spark. ``audit(n, probes, seed)`` returns the report;
+``main`` runs it and writes BENCH/overlay_mc_audit.json with provenance
+(git sha, N, seed, probes, cores, memory, argv, date).
 
     python jobs/overlay_mc_audit.py [N_PER_CLASS] [PROBES_PER_PAIR]
 """
@@ -24,51 +26,15 @@ from __future__ import annotations
 import json
 import os
 import sys
+import time
 
 import numpy as np
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 from geomesa_spark.functions import geometry as geo  # noqa: E402
-from jobs.overlay_null_rate import OPS, _holed_polygon, _rect, gen_pair  # noqa: E402
-
-
-def _nested_island_wkt(rng) -> str:
-    """MULTIPOLYGON: big shell with a rect hole, plus an island member
-    nested INSIDE the hole (the region algebra's island-in-hole carve
-    path). Integer-snapped so degenerate contact is common."""
-    x0, y0 = int(rng.integers(-2, 2)), int(rng.integers(-2, 2))
-    hole = (
-        f"({x0 - 3} {y0 - 3}, {x0 + 3} {y0 - 3}, {x0 + 3} {y0 + 3}, "
-        f"{x0 - 3} {y0 + 3}, {x0 - 3} {y0 - 3})"
-    )
-    iw = int(rng.integers(1, 3))
-    isl = (
-        f"(({x0 - iw} {y0 - iw}, {x0 + iw} {y0 - iw}, {x0 + iw} {y0 + iw}, "
-        f"{x0 - iw} {y0 + iw}, {x0 - iw} {y0 - iw}))"
-    )
-    shell = (
-        f"(({x0 - 5} {y0 - 5}, {x0 + 5} {y0 - 5}, {x0 + 5} {y0 + 5}, "
-        f"{x0 - 5} {y0 + 5}, {x0 - 5} {y0 - 5}), {hole})"
-    )
-    return f"MULTIPOLYGON ({shell}, {isl})"
-
-
-def gen_pair_ext(rng, cls):
-    """Audit-only structural classes beyond overlay_null_rate's."""
-    if cls == "nested_islands":
-        return _nested_island_wkt(rng), _rect(rng, lo=-6, hi=8)
-    if cls == "multi_member":
-        a1 = _holed_polygon(rng, rng.uniform(-4, -2), rng.uniform(-2, 2), rng.uniform(1.5, 2.5), snap=True)
-        a2 = _holed_polygon(rng, rng.uniform(2, 4), rng.uniform(-2, 2), rng.uniform(1.5, 2.5), snap=True)
-        if a1 is None or a2 is None:
-            return None
-        a = "MULTIPOLYGON (%s, %s)" % (
-            a1[len("POLYGON "):], a2[len("POLYGON "):],
-        )
-        b = _holed_polygon(rng, rng.uniform(-2, 2), rng.uniform(-2, 2), rng.uniform(2.5, 4.5), snap=bool(rng.integers(2)))
-        return (a, b) if b else None
-    return gen_pair(rng, cls)
+from jobs.overlay_null_rate import CLASSES, OPS, SEED, gen_pair_ext  # noqa: E402
+from jobs.provenance import provenance  # noqa: E402
 
 BOOLS = {
     "intersection": lambda a, b: a & b,
@@ -108,16 +74,14 @@ def _bbox(g):
     return min(xs), min(ys), max(xs), max(ys)
 
 
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 400
-    n_probes = int(sys.argv[2]) if len(sys.argv) > 2 else 256
-    rng = np.random.default_rng(20260818)
+def audit(n: int, n_probes: int, seed: int = SEED) -> dict:
+    """Audit N pairs per class with ``n_probes`` probes per pair:
+    {"classes": {cls: {op: {checked, null, probes, mismatch}}},
+    "mismatch_examples": [...]} (first 10 mismatches)."""
+    rng = np.random.default_rng(seed)
     report: dict = {}
     examples: list = []
-    for cls in (
-        "holed_generic", "holed_snapped", "rect_grid", "gc_overlap",
-        "gc_mixed", "nested_islands", "multi_member",
-    ):
+    for cls in CLASSES:
         pairs = []
         while len(pairs) < n:
             p = gen_pair_ext(rng, cls)
@@ -168,23 +132,37 @@ def main() -> None:
                             }
                         )
         report[cls] = row
-    here = os.path.dirname(os.path.abspath(__file__))
-    out = {
-        "n_per_class": n,
-        "probes_per_pair": n_probes,
-        "classes": report,
-        "mismatch_examples": examples,
-    }
-    with open(os.path.join(here, "..", "BENCH", "overlay_mc_audit.json"), "w") as f:
-        json.dump(out, f, indent=1)
+    return {"classes": report, "mismatch_examples": examples}
+
+
+def main() -> None:
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 400
+    n_probes = int(sys.argv[2]) if len(sys.argv) > 2 else 256
+    t0 = time.perf_counter()
+    res = audit(n, n_probes)
+    report = res["classes"]
     total_probes = sum(r[op]["probes"] for r in report.values() for op in OPS)
     total_bad = sum(r[op]["mismatch"] for r in report.values() for op in OPS)
-    print(f"probes checked: {total_probes}  mismatches: {total_bad}")
+    total_null = sum(r[op]["null"] for r in report.values() for op in OPS)
+    out = {
+        "provenance": provenance(n, SEED, probes_per_pair=n_probes,
+                                 wall_s=round(time.perf_counter() - t0, 1)),
+        "n_per_class": n,
+        "probes_per_pair": n_probes,
+        "probes_checked": total_probes,
+        "mismatches": total_bad,
+        "nulls": total_null,
+        **res,
+    }
+    here = os.path.dirname(os.path.abspath(__file__))
+    with open(os.path.join(here, "..", "BENCH", "overlay_mc_audit.json"), "w") as f:
+        json.dump(out, f, indent=1)
+    print(f"probes checked: {total_probes}  mismatches: {total_bad}  nulls: {total_null}")
     for cls, row in report.items():
         print(cls, {op: (row[op]["mismatch"], row[op]["null"]) for op in OPS})
-    if examples:
+    if res["mismatch_examples"]:
         print("FIRST EXAMPLES:")
-        for e in examples[:3]:
+        for e in res["mismatch_examples"][:3]:
             print(json.dumps(e))
 
 

@@ -1,40 +1,47 @@
-"""Quantify the overlay kernels' honest-NULL residue (round-4 verdict
-ask #3): sweep randomized operand pairs per structural class and report
-the NULL rate of st_intersection / st_union / st_difference /
-st_symDifference's underlying kernels. The policy is NULL-never-wrong;
-this measures how often NULL actually happens so a user can predict it.
+"""Null rate and per-pair time of the overlay kernels behind
+st_intersection / st_union / st_difference / st_symDifference. The
+policy is exact-or-null; this measures how often null happens and what
+a pair costs, per structural class, plus a scale sweep over star pairs.
 
 Classes:
   holed_generic      float-coordinate convex-ish shells with rect holes
-                     (generic position — the GH main path)
+                     (generic position)
   holed_snapped      the same shapes snapped to an integer grid
-                     (shared edges/vertices: degenerate-contact rechain)
+                     (shared edges and vertices: degenerate contact)
   rect_grid          axis-aligned integer rectangles (maximal edge
                      sharing — worst case for degenerate contact)
   gc_overlap         GEOMETRYCOLLECTION with OVERLAPPING members vs a
-                     polygon (round-5: pre-union normalization — the
-                     class the round-4 verdict flagged as the largest)
+                     polygon (pre-union normalization)
   gc_mixed           mixed-dimension GC (poly + line + point, members
                      may overlap) vs polygon
+  nested_islands     shell with a hole and an island member inside the
+                     hole vs a rect
+  multi_member       two holed members vs a holed polygon
+Star sweep: two overlapping random stars of 8, 32, 128 and 512 vertices.
 
-Pure numpy — no Spark. Writes BENCH/overlay_null_rate.json and prints
-the markdown table PLANS.md embeds.
+Pure numpy — no Spark. Writes BENCH/overlay_null_rate.json (null %,
+median and mean µs per pair by class × op, median ms per star pair,
+provenance) and prints the markdown tables PLANS.md embeds.
 
-    python jobs/overlay_null_rate.py [N_PER_CLASS]
+    python jobs/overlay_null_rate.py [N_PER_CLASS] [--star-pairs K] [--out PATH]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
+import time
 
 import numpy as np
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
+ROOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..")
+sys.path.insert(0, ROOT)
 
 from geomesa_spark.functions import geometry as geo  # noqa: E402
 from geomesa_spark.functions import st_functions as sf  # noqa: E402
+from jobs.provenance import provenance  # noqa: E402
 
 OPS = {
     "intersection": sf._overlay_intersection,
@@ -123,36 +130,146 @@ def gen_pair(rng, cls):
     raise ValueError(cls)
 
 
-def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 300
-    rng = np.random.default_rng(20260818)
-    table: dict = {}
-    for cls in ("holed_generic", "holed_snapped", "rect_grid", "gc_overlap", "gc_mixed"):
+def _nested_island_wkt(rng) -> str:
+    """MULTIPOLYGON: big shell with a rect hole, plus an island member
+    nested INSIDE the hole (the region algebra's island-in-hole carve
+    path). Integer-snapped so degenerate contact is common."""
+    x0, y0 = int(rng.integers(-2, 2)), int(rng.integers(-2, 2))
+    hole = (
+        f"({x0 - 3} {y0 - 3}, {x0 + 3} {y0 - 3}, {x0 + 3} {y0 + 3}, "
+        f"{x0 - 3} {y0 + 3}, {x0 - 3} {y0 - 3})"
+    )
+    iw = int(rng.integers(1, 3))
+    isl = (
+        f"(({x0 - iw} {y0 - iw}, {x0 + iw} {y0 - iw}, {x0 + iw} {y0 + iw}, "
+        f"{x0 - iw} {y0 + iw}, {x0 - iw} {y0 - iw}))"
+    )
+    shell = (
+        f"(({x0 - 5} {y0 - 5}, {x0 + 5} {y0 - 5}, {x0 + 5} {y0 + 5}, "
+        f"{x0 - 5} {y0 + 5}, {x0 - 5} {y0 - 5}), {hole})"
+    )
+    return f"MULTIPOLYGON ({shell}, {isl})"
+
+
+def gen_pair_ext(rng, cls):
+    """gen_pair plus the multi-member classes: a shell-hole-island
+    MULTIPOLYGON vs a rect, and a two-member holed MULTIPOLYGON vs a
+    holed polygon."""
+    if cls == "nested_islands":
+        return _nested_island_wkt(rng), _rect(rng, lo=-6, hi=8)
+    if cls == "multi_member":
+        a1 = _holed_polygon(rng, rng.uniform(-4, -2), rng.uniform(-2, 2), rng.uniform(1.5, 2.5), snap=True)
+        a2 = _holed_polygon(rng, rng.uniform(2, 4), rng.uniform(-2, 2), rng.uniform(1.5, 2.5), snap=True)
+        if a1 is None or a2 is None:
+            return None
+        a = "MULTIPOLYGON (%s, %s)" % (
+            a1[len("POLYGON "):], a2[len("POLYGON "):],
+        )
+        b = _holed_polygon(rng, rng.uniform(-2, 2), rng.uniform(-2, 2), rng.uniform(2.5, 4.5), snap=bool(rng.integers(2)))
+        return (a, b) if b else None
+    return gen_pair(rng, cls)
+
+
+CLASSES = (
+    "holed_generic", "holed_snapped", "rect_grid", "gc_overlap",
+    "gc_mixed", "nested_islands", "multi_member",
+)
+SEED = 20260818
+STAR_SIZES = (8, 32, 128, 512)
+
+
+def _star_ring(rng, n, cx, cy):
+    ang = np.sort(rng.uniform(0, 2 * np.pi, n))
+    rad = rng.uniform(1.0, 3.0, n)
+    pts = np.column_stack([cx + rad * np.cos(ang), cy + rad * np.sin(ang)])
+    return np.vstack([pts, pts[:1]])
+
+
+def star_pair(rng, n):
+    """Two overlapping n-vertex star polygons (radii in [1, 3], centres
+    0.8 apart): many proper crossings, the overlay's scale case."""
+    a, b = _star_ring(rng, n, 0.0, 0.0), _star_ring(rng, n, 0.7, 0.4)
+    return tuple(("POLYGON", r, np.asarray([0, len(r)])) for r in (a, b))
+
+
+def _timed(fn, ga, gb):
+    t0 = time.perf_counter()
+    try:
+        res = fn(ga, gb)
+    except Exception:
+        res = None
+    return res, time.perf_counter() - t0
+
+
+def null_rate_and_time(n: int, seed: int = SEED) -> dict:
+    """Per class × op: null % and per-pair time (median and mean µs)."""
+    rng = np.random.default_rng(seed)
+    out: dict = {"null_pct": {}, "us_per_pair_median": {}, "us_per_pair_mean": {}}
+    for cls in CLASSES:
         pairs = []
         while len(pairs) < n:
-            p = gen_pair(rng, cls)
+            p = gen_pair_ext(rng, cls)
             if p:
                 pairs.append(p)
-        row = {}
+        parsed = [(geo.parse_wkt(a), geo.parse_wkt(b)) for a, b in pairs]
+        for key in out:
+            out[key][cls] = {}
         for op, fn in OPS.items():
-            nulls = 0
-            for a, b in pairs:
-                ga, gb = geo.parse_wkt(a), geo.parse_wkt(b)
-                try:
-                    if fn(ga, gb) is None:
-                        nulls += 1
-                except Exception:
-                    nulls += 1
-            row[op] = round(100.0 * nulls / n, 2)
-        table[cls] = row
-    here = os.path.dirname(os.path.abspath(__file__))
-    os.makedirs(os.path.join(here, "..", "BENCH"), exist_ok=True)
-    with open(os.path.join(here, "..", "BENCH", "overlay_null_rate.json"), "w") as f:
-        json.dump({"n_per_class": n, "null_pct": table}, f, indent=1)
-    print("| class | " + " | ".join(OPS) + " |")
+            runs = [_timed(fn, ga, gb) for ga, gb in parsed]
+            us = np.asarray([t for _r, t in runs]) * 1e6
+            out["null_pct"][cls][op] = round(100.0 * sum(r is None for r, _t in runs) / n, 2)
+            out["us_per_pair_median"][cls][op] = round(float(np.median(us)), 1)
+            out["us_per_pair_mean"][cls][op] = round(float(us.mean()), 1)
+    return out
+
+
+def star_sweep(pairs_per_size: int, seed: int = SEED) -> dict:
+    """Per star size × op: median ms per pair and nulls."""
+    rng = np.random.default_rng(seed)
+    out: dict = {}
+    for n in STAR_SIZES:
+        pairs = [star_pair(rng, n) for _ in range(pairs_per_size)]
+        row: dict = {}
+        for op, fn in OPS.items():
+            runs = [_timed(fn, ga, gb) for ga, gb in pairs]
+            row[op] = {
+                "ms_median": round(1e3 * float(np.median([t for _r, t in runs])), 2),
+                "null": sum(r is None for r, _t in runs),
+            }
+        out[str(n)] = row
+    return out
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("n", nargs="?", type=int, default=300, help="pairs per class")
+    ap.add_argument("--star-pairs", type=int, default=5, help="star pairs per size")
+    ap.add_argument("--out", default=os.path.join(ROOT, "BENCH", "overlay_null_rate.json"))
+    args = ap.parse_args()
+    t0 = time.perf_counter()
+    table = null_rate_and_time(args.n)
+    stars = star_sweep(args.star_pairs)
+    report = {
+        "provenance": provenance(args.n, SEED, star_pairs_per_size=args.star_pairs,
+                                 wall_s=round(time.perf_counter() - t0, 1)),
+        "n_per_class": args.n,
+        **table,
+        "star_ms_per_pair": stars,
+    }
+    os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
+    with open(args.out, "w") as f:
+        json.dump(report, f, indent=1)
+    print("| class | " + " | ".join(f"{op} null / µs" for op in OPS) + " |")
     print("|---|" + "---|" * len(OPS))
-    for cls, row in table.items():
-        print(f"| {cls} | " + " | ".join(f"{row[op]}%" for op in OPS) + " |")
+    for cls in CLASSES:
+        cells = (
+            f"{table['null_pct'][cls][op]}% / {table['us_per_pair_median'][cls][op]:.0f}" for op in OPS
+        )
+        print(f"| {cls} | " + " | ".join(cells) + " |")
+    print("| star vertices | " + " | ".join(f"{op} ms" for op in OPS) + " |")
+    print("|---|" + "---|" * len(OPS))
+    for n, row in stars.items():
+        print(f"| {n} | " + " | ".join(f"{row[op]['ms_median']}" for op in OPS) + " |")
 
 
 if __name__ == "__main__":

@@ -17,7 +17,7 @@ Probes within ``tol`` of any polygon edge abstain (classification there
 is legitimately boundary). Mismatches are reproducible wrong answers,
 reported with operand WKTs.
 
-Pure numpy — no Spark. Writes BENCH/relate_mc_audit.json.
+Pure numpy — no Spark. Writes BENCH/relate_mc_audit.json with provenance.
 
     python jobs/relate_mc_audit.py [N_PER_CLASS] [PROBES_PER_PAIR]
 """
@@ -27,25 +27,26 @@ from __future__ import annotations
 import json
 import os
 import sys
+import time
 
 import numpy as np
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 from geomesa_spark.functions import geometry as geo  # noqa: E402
-from jobs.overlay_mc_audit import _bbox, _member, _near_any_edge, gen_pair_ext  # noqa: E402
+from jobs.overlay_mc_audit import _bbox, _member, _near_any_edge  # noqa: E402
+from jobs.overlay_null_rate import CLASSES, SEED, gen_pair_ext  # noqa: E402
+from jobs.provenance import provenance  # noqa: E402
 
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 500
     n_probes = int(sys.argv[2]) if len(sys.argv) > 2 else 256
-    rng = np.random.default_rng(20260818)
+    t0 = time.perf_counter()
+    rng = np.random.default_rng(SEED)
     report: dict = {}
     examples: list = []
-    for cls in (
-        "holed_generic", "holed_snapped", "rect_grid", "gc_overlap",
-        "gc_mixed", "nested_islands", "multi_member",
-    ):
+    for cls in CLASSES:
         pairs = []
         while len(pairs) < n:
             p = gen_pair_ext(rng, cls)
@@ -95,6 +96,7 @@ def main() -> None:
         report[cls] = row
     here = os.path.dirname(os.path.abspath(__file__))
     out = {
+        "provenance": provenance(n, SEED, probes_per_pair=n_probes, wall_s=round(time.perf_counter() - t0, 1)),
         "n_per_class": n,
         "probes_per_pair": n_probes,
         "classes": report,

@@ -1,6 +1,5 @@
-"""Round-4 overlay hardening: holed-operand overlay (region algebra),
-degenerate shared-edge contact (DE-9IM fallback + boundary rechaining),
-transitive member merging, and multi-part DE-9IM goldens.
+"""Overlay hardening: holed-operand overlay, degenerate shared-edge
+contact, transitive member merging, and multi-part DE-9IM goldens.
 
 Pure-numpy tests (no SparkSession): they exercise the same kernels the
 st_intersection/st_difference/st_union pandas UDFs dispatch to. Property
@@ -159,9 +158,8 @@ def test_union_hole_filled_exactly():
 
 
 def test_shared_edge_goldens():
-    """Degenerate contact recovered by the DE-9IM fallback: the JTS
-    canonical answers for edge-adjacent, corner-touching, covered-with-
-    contact, and equal operands."""
+    """Degenerate contact: the JTS canonical answers for edge-adjacent,
+    corner-touching, covered-with-contact, and equal operands."""
     g = geo.parse_wkt
     C = g("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")
     D = g("POLYGON ((1 0, 2 0, 2 1, 1 1, 1 0))")
@@ -323,27 +321,24 @@ def test_de9im_gc_open_linestring_boundary():
     assert geo.de9im(geo.relate_geoms(*A2, *B)) == "1FFFFF212"
 
 
-def test_chain_closed_rings_contract():
-    """The rechainer refuses ambiguity: an open chain and a degree-4
-    junction both return None; a clean split rectangle re-chains."""
-    seg = lambda *pts: np.asarray(pts, dtype=np.float64)
-    ok = geo.chain_closed_rings(
-        [seg((0, 0), (1, 0)), seg((1, 0), (1, 1), (0, 1)), seg((0, 1), (0, 0))]
-    )
+def test_trace_faces_contract():
+    """The slab kernel's ring builder refuses ambiguity and resolves
+    crossings: an open chain returns None, a rectangle split into
+    directed pieces re-chains into one 5-vertex ring, and a degree-4
+    junction (two squares meeting at a corner) splits into two rings."""
+    from geomesa_spark.functions.slab_overlay import _trace_faces
+
+    def walk(*pts):
+        return [[pts[i], pts[i + 1]] for i in range(len(pts) - 1)]
+
+    rect = walk((0, 0), (1, 0), (1, 1), (0, 1), (0, 0))
+    ok = _trace_faces(rect, 1e-9)
     assert ok is not None and len(ok) == 1 and len(ok[0]) == 5
-    assert geo.chain_closed_rings([seg((0, 0), (1, 0)), seg((1, 0), (1, 1))]) is None
-    # degree-4 junction at (1, 0)
-    assert (
-        geo.chain_closed_rings(
-            [
-                seg((0, 0), (1, 0)),
-                seg((1, 0), (0, 0)),
-                seg((2, 0), (1, 0)),
-                seg((1, 0), (2, 0)),
-            ]
-        )
-        is None
-    )
+    assert _trace_faces(walk((0, 0), (1, 0), (1, 1)), 1e-9) is None
+    bowtie = rect + walk((1, 1), (2, 1), (2, 2), (1, 2), (1, 1))
+    rings = _trace_faces(bowtie, 1e-9)
+    assert rings is not None and sorted(len(r) for r in rings) == [5, 5]
+    assert sorted(abs(geo.ring_signed_area(r)) for r in rings) == [1.0, 1.0]
 
 
 def test_collection_and_mixed_dim_overlays():
@@ -435,16 +430,17 @@ def test_buffer_geometrycollection():
 
 
 def test_symdifference():
-    """st_symDifference: (A∪B)\\(A∩B) preferred form — area identity
+    """st_symDifference: area identity
     area(AΔB) == area(A)+area(B)−2·area(A∩B) on random star pairs, and
-    canonical goldens for equal/touching/line operands."""
+    canonical goldens for crossing/equal/touching/line operands."""
     g = geo.parse_wkt
     A = g("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")
     B = g("POLYGON ((2 2, 6 2, 6 6, 2 6, 2 2))")
-    w = stf._overlay_symdifference(A, B)
-    k, c, o = geo.parse_wkt(w)
-    assert k == "POLYGON" and len(o) == 3  # one ring + the A∩B hole
-    assert stf._areal_area(c, o) == pytest.approx(24.0)
+    # the OGC/JTS form: two L-shapes meeting at (4 2) and (2 4)
+    assert stf._overlay_symdifference(A, B) == (
+        "MULTIPOLYGON (((0 0, 4 0, 4 2, 2 2, 2 4, 0 4, 0 0)), "
+        "((2 4, 4 4, 4 2, 6 2, 6 6, 2 6, 2 4)))"
+    )
     assert stf._overlay_symdifference(A, A) == "POLYGON EMPTY"
     assert stf._overlay_symdifference(
         g("LINESTRING (0 0, 4 0)"), g("LINESTRING (2 0, 6 0)")
@@ -615,7 +611,7 @@ def test_symdifference_shared_edge_chain_degenerate_slivers():
     boundary chain made the intersection emit an exactly-zero-area
     sliver ring and duplicate consecutive vertices; the u \\ i subtract
     kernels then exploded into 29 overlapping pieces (24% probe
-    mismatch). _areal_members now drops degenerate rings exactly."""
+    mismatch). The slab kernel answers the pair exactly."""
     A = geo.parse_wkt(
         "POLYGON ((-6 1, -5 -2, -4 -3, -2 -4, 6 4, 5 5, -1 8, -6 1), "
         "(-1.5 0, 0 0, 0 2, -1.5 2, -1.5 0))"
@@ -676,8 +672,7 @@ def test_symdifference_nested_holes_spike_ring():
     union ring threading the nested hole's corners via an exact
     zero-width backtrack spike; the u \\ i add-back intersect kernel
     answered EMPTY on the spiked ring, silently losing the H_B \\ H_A
-    patch. _clean_ring now collapses exact backtrack spikes
-    (parity-exact)."""
+    patch. The slab kernel answers the pair exactly."""
     A = geo.parse_wkt(
         "POLYGON ((-4 -1, 2 -2, 3 -2, 2 2, -0 3, -4 -1), "
         "(-1 -1, -0.5 -1, -0.5 -0, -1 -0, -1 -1))"
@@ -707,9 +702,8 @@ def test_areal_difference_disjoint_piece_gate():
     a 4-member degenerate intersection drove the member-subtraction
     chain into overlapping sliver pieces (duplicated zero-area parts, a
     piece holed by its own fp-noise twin) without any step nulling —
-    parity area 72.74 vs the true 68.69. _areal_difference now enforces
-    its own disjoint-piece-list invariant as an exact output gate; the
-    ladder's slab rung recovers the exact answer."""
+    parity area 72.74 vs the true 68.69. The slab kernel answers the
+    pair exactly."""
     A = geo.parse_wkt(
         "POLYGON ((-5 -3, 1 -4, 4 -1, 2 7, -4 7, -5 6, -5 -3), "
         "(-2 0, 0.5 0, 0.5 2.5, -2 2.5, -2 0))"
@@ -734,3 +728,35 @@ def test_areal_difference_disjoint_piece_gate():
     B2 = geo.parse_wkt("POLYGON ((0 5, 9 5, 9 9, 0 9, 0 5))")
     w2 = stf._overlay_symdifference(A2, B2)
     assert w2 is not None
+
+
+def test_nested_island_appears_once():
+    """Regression: a shell-hole-island MULTIPOLYGON against a far
+    rectangle. Union and symmetric difference used to repeat the island
+    member, so |A∩B| + |A∪B| fell short of |A| + |B| by its area."""
+    A = geo.parse_wkt(
+        "MULTIPOLYGON (((-5 -5, 5 -5, 5 5, -5 5, -5 -5), (-3 -3, 3 -3, 3 3, -3 3, -3 -3)), "
+        "((-1 -1, 1 -1, 1 1, -1 1, -1 -1)))"
+    )
+    B = geo.parse_wkt("POLYGON ((10 10, 12 10, 12 12, 10 12, 10 10))")
+    island = "((-1 -1, 1 -1, 1 1, -1 1, -1 -1))"
+    for fn in (stf._overlay_union, stf._overlay_symdifference):
+        w = fn(A, B)
+        assert w.count(island) == 1, (fn.__name__, w)
+        assert len(geo.geom_parts(*geo.parse_wkt(w))) == 3
+    area_a, area_b = _geom_area(A), _geom_area(B)
+    assert area_a == 100.0 - 36.0 + 4.0
+    i, u = stf._overlay_intersection(A, B), stf._overlay_union(A, B)
+    assert i == "POLYGON EMPTY"
+    assert _result_area(i) + _result_area(u) == area_a + area_b
+    assert _result_area(stf._overlay_symdifference(A, B)) == area_a + area_b
+
+
+def test_escape_witness_ignores_zero_width_slit():
+    """A square with an inward zero-width slit has the plain square as
+    its closure, so it covers the plain square: the slit's doubled edge
+    is a zero-width interval between crossings, not an outside region."""
+    slit = geo.parse_wkt("POLYGON ((0 0, 4 0, 4 4, 2 4, 2 2, 2 4, 0 4, 0 0))")
+    square = geo.parse_wkt("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")
+    assert not geo._escape_witness(slit[1], slit[2], square[1], square[2])
+    assert geo.pred_covers(geo.relate_geoms(*slit, *square))

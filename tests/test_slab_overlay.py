@@ -1,6 +1,6 @@
-"""Slab-sweep boolean fallback (functions/slab_overlay.py): the
-degenerate-contact overlay of last resort. Deterministic goldens for the
-shared-edge cases the GH fold refuses, plus a randomized property sweep:
+"""Slab-sweep boolean (functions/slab_overlay.py): the areal overlay
+kernel. Deterministic goldens for shared-edge contact (the cases that
+are degenerate for crossing-based clippers), plus a randomized property sweep:
 every non-None answer across all four ops must agree with Monte-Carlo
 membership of the operands (the area-identity gate makes wrong answers
 structurally impossible — these tests check it stays that way)."""
@@ -32,25 +32,25 @@ def _want(op, a_in, b_in):
 
 
 def test_shared_edge_rect_goldens():
-    """Overlapping rects sharing part of an edge — GH-degenerate, slab
-    exact. The polygons below are the advisor-era sweep's failing pair."""
+    """Overlapping rects sharing part of an edge — degenerate for a
+    crossing-based clipper, exact for the slab sweep."""
     A = geo.parse_wkt("POLYGON ((3 5, 8 5, 8 7, 3 7, 3 5))")
     B = geo.parse_wkt("POLYGON ((7 6, 8 6, 8 9, 7 9, 7 6))")
-    assert sf._slab_fallback(A, B, "intersection") == (
+    assert sf._areal_overlay(A, B, "intersection") == (
         "POLYGON ((7 6, 8 6, 8 7, 7 7, 7 6))"
     )
-    u = sf._slab_fallback(A, B, "union")
+    u = sf._areal_overlay(A, B, "union")
     k, c, o = geo.parse_wkt(u)
     assert k == "POLYGON"
     assert geo.polygon_area_deg2(c, o) == 10.0 + 3.0 - 1.0
-    d = sf._slab_fallback(A, B, "difference")
+    d = sf._areal_overlay(A, B, "difference")
     k, c, o = geo.parse_wkt(d)
     assert geo.polygon_area_deg2(c, o) == 10.0 - 1.0
 
 
 def test_full_overlay_path_recovers_degenerate_contact():
-    """End-to-end: the public overlay entrances resolve the formerly
-    null shared-edge pairs (through whichever fallback fires first)."""
+    """End-to-end: the public overlay entrances answer shared-edge
+    pairs exactly."""
     cases = [
         ("POLYGON ((0 6, 6 6, 6 9, 0 9, 0 6))", "POLYGON ((0 3, 2 3, 2 7, 0 7, 0 3))"),
         ("POLYGON ((2 4, 7 4, 7 5, 2 5, 2 4))", "POLYGON ((1 2, 5 2, 5 5, 1 5, 1 2))"),
@@ -80,14 +80,14 @@ def test_holed_degenerate_pair():
         "POLYGON ((0 0, 8 0, 8 8, 0 8, 0 0), (2 2, 6 2, 6 6, 2 6, 2 2))"
     )
     B = geo.parse_wkt("POLYGON ((6 2, 10 2, 10 6, 6 6, 6 2))")  # shares hole edge
-    out = sf._slab_fallback(A, B, "union")
+    out = sf._areal_overlay(A, B, "union")
     assert out is not None
     k, c, o = geo.parse_wkt(out)
     # union area: (64-16) + 16 - overlap(B∩A = x∈[8,10]? no: B∩A ring part)
     # A covers x∈[0,8] minus hole [2,6]²; B = [6,10]×[2,6].
     # B ∩ A-solid = x∈[6,8],y∈[2,6] (right of the hole) → area 8
     assert geo.polygon_area_deg2(c, o) == 48.0 + 16.0 - 8.0
-    inter = sf._slab_fallback(A, B, "intersection")
+    inter = sf._areal_overlay(A, B, "intersection")
     ki, ci, oi = geo.parse_wkt(inter)
     assert geo.polygon_area_deg2(ci, oi) == 8.0
 
@@ -109,7 +109,7 @@ def test_random_snapped_property_sweep():
     for _ in range(120):
         ga, gb = geo.parse_wkt(rect()), geo.parse_wkt(rect())
         for op in OPS:
-            out = sf._slab_fallback(ga, gb, op)
+            out = sf._areal_overlay(ga, gb, op)
             if out is None or out.endswith(" EMPTY"):
                 continue
             g = geo.parse_wkt(out)
@@ -120,4 +120,4 @@ def test_random_snapped_property_sweep():
                 px, py = rng.uniform(-0.5, 10.5), rng.uniform(-0.5, 10.5)
                 want = _want(op, _member(ga, px, py), _member(gb, px, py))
                 assert _member(g, px, py) == want, (op, out)
-    assert answered > 300  # the fallback answers the vast majority
+    assert answered > 300  # the kernel answers the vast majority
