@@ -24,11 +24,18 @@ median and mean µs per pair by class × op, median ms per star pair,
 provenance) and prints the markdown tables PLANS.md embeds.
 
     python jobs/overlay_null_rate.py [N_PER_CLASS] [--star-pairs K] [--out PATH]
+        [--against OTHER_CHECKOUT]
+
+--against times a second checkout of the repository (e.g. the parent
+commit) in the same process, pair by pair beside this one, and records
+its numbers under "against".
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
+import importlib
 import json
 import os
 import sys
@@ -41,7 +48,7 @@ sys.path.insert(0, ROOT)
 
 from geomesa_spark.functions import geometry as geo  # noqa: E402
 from geomesa_spark.functions import st_functions as sf  # noqa: E402
-from jobs.provenance import provenance  # noqa: E402
+from jobs.provenance import git_sha, provenance  # noqa: E402
 
 OPS = {
     "intersection": sf._overlay_intersection,
@@ -192,19 +199,69 @@ def star_pair(rng, n):
     return tuple(("POLYGON", r, np.asarray([0, len(r)])) for r in (a, b))
 
 
-def _timed(fn, ga, gb):
-    t0 = time.perf_counter()
+def _package_modules() -> dict:
+    return {k: m for k, m in sys.modules.items() if k.split(".")[0] == "geomesa_spark"}
+
+
+@contextlib.contextmanager
+def _package(mods: dict | None):
+    """Run with ``mods`` as the geomesa_spark package, so that imports
+    made inside a call resolve in the same checkout as the call."""
+    mine = _package_modules()
+    sys.modules.update(mods or {})
     try:
-        res = fn(ga, gb)
-    except Exception:
-        res = None
-    return res, time.perf_counter() - t0
+        yield
+    finally:
+        sys.modules.update(mine)
 
 
-def null_rate_and_time(n: int, seed: int = SEED) -> dict:
-    """Per class × op: null % and per-pair time (median and mean µs)."""
+def load_checkout(root: str) -> tuple[dict, dict]:
+    """The overlay entry points of another checkout of this repository,
+    imported side by side with this one: (ops, its package modules)."""
+    mine = _package_modules()
+    for k in mine:
+        del sys.modules[k]
+    sys.path.insert(0, os.path.abspath(root))
+    try:
+        other = importlib.import_module("geomesa_spark.functions.st_functions")
+        importlib.import_module("geomesa_spark.functions.slab_overlay")
+        theirs = _package_modules()
+    finally:
+        sys.path.pop(0)
+        for k in _package_modules():
+            del sys.modules[k]
+        sys.modules.update(mine)
+    return {op: getattr(other, f"_overlay_{op}") for op in OPS}, theirs
+
+
+def _timed(side, op, ga, gb):
+    ops, mods = side
+    with _package(mods):
+        t0 = time.perf_counter()
+        try:
+            res = ops[op](ga, gb)
+        except Exception:
+            res = None
+        return res, time.perf_counter() - t0
+
+
+def _paired(sides: dict, op: str, pairs: list) -> dict:
+    """Every pair through every side, the side order alternating from
+    pair to pair so slow drifts of the host hit all sides alike:
+    {label: [(result, seconds), ...]}."""
+    runs: dict = {label: [] for label in sides}
+    labels = list(sides)
+    for i, (ga, gb) in enumerate(pairs):
+        for label in labels if i % 2 == 0 else labels[::-1]:
+            runs[label].append(_timed(sides[label], op, ga, gb))
+    return runs
+
+
+def null_rate_and_time(n: int, sides: dict, seed: int = SEED) -> dict:
+    """Per side, class × op: null % and per-pair time (median and mean µs)."""
     rng = np.random.default_rng(seed)
-    out: dict = {"null_pct": {}, "us_per_pair_median": {}, "us_per_pair_mean": {}}
+    keys = ("null_pct", "us_per_pair_median", "us_per_pair_mean")
+    out: dict = {label: {k: {} for k in keys} for label in sides}
     for cls in CLASSES:
         pairs = []
         while len(pairs) < n:
@@ -212,54 +269,33 @@ def null_rate_and_time(n: int, seed: int = SEED) -> dict:
             if p:
                 pairs.append(p)
         parsed = [(geo.parse_wkt(a), geo.parse_wkt(b)) for a, b in pairs]
-        for key in out:
-            out[key][cls] = {}
-        for op, fn in OPS.items():
-            runs = [_timed(fn, ga, gb) for ga, gb in parsed]
-            us = np.asarray([t for _r, t in runs]) * 1e6
-            out["null_pct"][cls][op] = round(100.0 * sum(r is None for r, _t in runs) / n, 2)
-            out["us_per_pair_median"][cls][op] = round(float(np.median(us)), 1)
-            out["us_per_pair_mean"][cls][op] = round(float(us.mean()), 1)
+        for op in OPS:
+            for label, runs in _paired(sides, op, parsed).items():
+                us = np.asarray([t for _r, t in runs]) * 1e6
+                row = out[label]
+                row["null_pct"].setdefault(cls, {})[op] = round(100.0 * sum(r is None for r, _t in runs) / n, 2)
+                row["us_per_pair_median"].setdefault(cls, {})[op] = round(float(np.median(us)), 1)
+                row["us_per_pair_mean"].setdefault(cls, {})[op] = round(float(us.mean()), 1)
     return out
 
 
-def star_sweep(pairs_per_size: int, seed: int = SEED) -> dict:
-    """Per star size × op: median ms per pair and nulls."""
+def star_sweep(pairs_per_size: int, sides: dict, seed: int = SEED) -> dict:
+    """Per side, star size × op: median ms per pair and nulls."""
     rng = np.random.default_rng(seed)
-    out: dict = {}
+    out: dict = {label: {} for label in sides}
     for n in STAR_SIZES:
         pairs = [star_pair(rng, n) for _ in range(pairs_per_size)]
-        row: dict = {}
-        for op, fn in OPS.items():
-            runs = [_timed(fn, ga, gb) for ga, gb in pairs]
-            row[op] = {
-                "ms_median": round(1e3 * float(np.median([t for _r, t in runs])), 2),
-                "null": sum(r is None for r, _t in runs),
-            }
-        out[str(n)] = row
+        for op in OPS:
+            for label, runs in _paired(sides, op, pairs).items():
+                out[label].setdefault(str(n), {})[op] = {
+                    "ms_median": round(1e3 * float(np.median([t for _r, t in runs])), 2),
+                    "null": sum(r is None for r, _t in runs),
+                }
     return out
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("n", nargs="?", type=int, default=300, help="pairs per class")
-    ap.add_argument("--star-pairs", type=int, default=5, help="star pairs per size")
-    ap.add_argument("--out", default=os.path.join(ROOT, "BENCH", "overlay_null_rate.json"))
-    args = ap.parse_args()
-    t0 = time.perf_counter()
-    table = null_rate_and_time(args.n)
-    stars = star_sweep(args.star_pairs)
-    report = {
-        "provenance": provenance(args.n, SEED, star_pairs_per_size=args.star_pairs,
-                                 wall_s=round(time.perf_counter() - t0, 1)),
-        "n_per_class": args.n,
-        **table,
-        "star_ms_per_pair": stars,
-    }
-    os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
-    with open(args.out, "w") as f:
-        json.dump(report, f, indent=1)
-    print("| class | " + " | ".join(f"{op} null / µs" for op in OPS) + " |")
+def _print_tables(table: dict, stars: dict, title: str) -> None:
+    print(f"{title}\n| class | " + " | ".join(f"{op} null / µs" for op in OPS) + " |")
     print("|---|" + "---|" * len(OPS))
     for cls in CLASSES:
         cells = (
@@ -270,6 +306,40 @@ def main() -> None:
     print("|---|" + "---|" * len(OPS))
     for n, row in stars.items():
         print(f"| {n} | " + " | ".join(f"{row[op]['ms_median']}" for op in OPS) + " |")
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("n", nargs="?", type=int, default=300, help="pairs per class")
+    ap.add_argument("--star-pairs", type=int, default=5, help="star pairs per size")
+    ap.add_argument("--against", help="another checkout to time pair by pair beside this one")
+    ap.add_argument("--out", default=os.path.join(ROOT, "BENCH", "overlay_null_rate.json"))
+    args = ap.parse_args()
+    t0 = time.perf_counter()
+    sides = {"this": (OPS, None)}
+    if args.against:
+        sides["against"] = load_checkout(args.against)
+    table = null_rate_and_time(args.n, sides)
+    stars = star_sweep(args.star_pairs, sides)
+    report = {
+        "provenance": provenance(args.n, SEED, star_pairs_per_size=args.star_pairs,
+                                 wall_s=round(time.perf_counter() - t0, 1)),
+        "n_per_class": args.n,
+        **table["this"],
+        "star_ms_per_pair": stars["this"],
+    }
+    if args.against:
+        report["against"] = {
+            "checkout": os.path.abspath(args.against),
+            "git_sha": git_sha(args.against),
+            **table["against"],
+            "star_ms_per_pair": stars["against"],
+        }
+    os.makedirs(os.path.dirname(os.path.abspath(args.out)), exist_ok=True)
+    with open(args.out, "w") as f:
+        json.dump(report, f, indent=1)
+    for label in sides:
+        _print_tables(table[label], stars[label], label)
 
 
 if __name__ == "__main__":

@@ -13,16 +13,16 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def git_sha() -> str:
-    """HEAD sha of the checkout, suffixed ``-dirty`` when tracked files
-    under geomesa_spark/ or jobs/ differ from it; ``unknown`` outside a
-    git checkout."""
+def git_sha(root: str = ROOT) -> str:
+    """HEAD sha of the checkout at ``root``, suffixed ``-dirty`` when
+    tracked files under geomesa_spark/ or jobs/ differ from it;
+    ``unknown`` outside a git checkout."""
     try:
         sha = subprocess.run(
-            ["git", "-C", ROOT, "rev-parse", "HEAD"], capture_output=True, text=True, check=True
+            ["git", "-C", root, "rev-parse", "HEAD"], capture_output=True, text=True, check=True
         ).stdout.strip()
         dirty = subprocess.run(
-            ["git", "-C", ROOT, "status", "--porcelain", "--untracked-files=no", "--", "geomesa_spark", "jobs"],
+            ["git", "-C", root, "status", "--porcelain", "--untracked-files=no", "--", "geomesa_spark", "jobs"],
             capture_output=True, text=True, check=True,
         ).stdout.strip()
     except (OSError, subprocess.CalledProcessError):
