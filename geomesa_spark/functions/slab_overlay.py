@@ -9,8 +9,9 @@ corners):
 1. Cut the plane into vertical slabs at every vertex x of either
    operand plus every proper A×B edge-crossing x. Inside a slab no two
    edges cross, so the covering edges are totally ordered by their
-   midline y. All (edge, slab) incidences are evaluated at once in
-   numpy; an edge's y at its own vertex x is that vertex exactly.
+   midline y. The (edge, slab) incidences are evaluated in numpy, a
+   block of consecutive slabs at a time; an edge's y at its own
+   vertex x is that vertex exactly.
 2. Walk each slab bottom-up accumulating even-odd parity for A and B
    separately (holes need no special handling — OGC-valid rings are
    even-odd compatible); coincident edges (shared boundary) form one
@@ -29,7 +30,8 @@ corners):
 
 Cost: O(V + K) slabs, each holding the edges that span it — O(V·(V+K))
 numpy work in the worst case, plus an O(E_A·E_B) vectorized crossing
-scan.
+scan. Memory is bounded by the block size (_SLAB_CELLS incidences), not
+by the total incidence count.
 """
 
 from __future__ import annotations
@@ -48,6 +50,7 @@ _OPS = {
 }
 
 _CROSS_CHUNK = 1 << 20  # edge pairs per vectorized crossing block
+_SLAB_CELLS = 1 << 20  # (edge, slab) incidences per sweep block
 
 
 def _edges(g) -> np.ndarray:
@@ -210,28 +213,34 @@ def _start_at_min(ring: np.ndarray) -> np.ndarray:
     return np.vstack([body, body[:1]])
 
 
-def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
-    """Boolean of two areal geometries by trapezoidal sweep.
-    Returns a list of (coords, ring_offsets) members (possibly empty),
-    or None when ring assembly or the area identity fails."""
-    ind = _OPS[op]
-    ea, eb = _edges(ga), _edges(gb)
-    if not len(ea) or not len(eb):
-        return None
-    lo_a, hi_a = ea.reshape(-1, 2).min(axis=0), ea.reshape(-1, 2).max(axis=0)
-    lo_b, hi_b = eb.reshape(-1, 2).min(axis=0), eb.reshape(-1, 2).max(axis=0)
-    if op == "intersection" and ((hi_a < lo_b) | (hi_b < lo_a)).any():
-        return []  # bounding boxes apart: no common point
-    e = np.concatenate([ea, eb])
-    xs = np.unique(np.concatenate([e[:, 0], e[:, 2], _crossing_xs(ea, eb)]))
+def _merge_runs(c, f, s0, s1, y0, y1):
+    """Merge boundary pieces cut from the same carrier edge ``c`` with
+    the same direction ``f`` whose slab ranges [s0, s1] abut, so output
+    vertices are input vertices or proper crossings, never slab cuts:
+    the (c, f, s0, s1, y0, y1) rows of the merged runs, ordered by
+    carrier, direction and slab."""
+    k = np.lexsort((s0, f, c))
+    c, f, s0, s1, y0, y1 = c[k], f[k], s0[k], s1[k], y0[k], y1[k]
+    run = np.empty(len(c) + 1, dtype=bool)
+    run[0] = run[-1] = True
+    run[1:-1] = (c[1:] != c[:-1]) | (f[1:] != f[:-1]) | (s0[1:] != s1[:-1] + 1)
+    cut = np.flatnonzero(run)
+    r0, r1 = cut[:-1], cut[1:] - 1
+    return c[r0], f[r0], s0[r0], s1[r1], y0[r0], y1[r1]
 
-    # every (edge, slab) incidence of a non-vertical edge, the edge
-    # oriented left to right as (lx, ly, rx, ry)
-    e = np.where((e[:, 0] > e[:, 2])[:, None], e[:, [2, 3, 0, 1]], e)
-    span = np.searchsorted(xs, e[:, [0, 2]])
-    n_slabs = span[:, 1] - span[:, 0]
-    eid = np.repeat(np.arange(len(e)), n_slabs)
-    slab = np.arange(len(eid)) - np.repeat(np.cumsum(n_slabs) - n_slabs - span[:, 0], n_slabs)
+
+def _sweep_block(e, n_a, xs, span, s0, s1, ind, tol):
+    """Sweep slabs s0..s1-1: (trapezoid area, boundary runs on edges as
+    _merge_runs rows, coverage events at the slab borders as (border,
+    y, code) arrays), or None on open parity. ``e`` holds the edges
+    oriented left to right, A's first ``n_a`` of them; ``span`` their
+    slab ranges."""
+    # every (edge, slab) incidence of a non-vertical edge in the block
+    sel = np.flatnonzero((span[:, 0] < s1) & (span[:, 1] > s0))
+    first = np.maximum(span[sel, 0], s0)
+    n_slabs = np.minimum(span[sel, 1], s1) - first
+    eid = np.repeat(sel, n_slabs)
+    slab = np.arange(len(eid)) - np.repeat(np.cumsum(n_slabs) - n_slabs - first, n_slabs)
     x0, x1 = xs[slab], xs[slab + 1]
     lx, ly, rx, ry = e[eid].T
     # multiply before dividing: a vertex of the other operand lying on
@@ -247,7 +256,7 @@ def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
     bounds = np.flatnonzero(new)  # one group per set of coincident edges
     gs = bounds[:-1]
     g_slab, g_y0, g_y1 = slab[gs], y0[gs], y1[gs]
-    na = np.add.reduceat((eid < len(ea)).astype(np.int64), gs)
+    na = np.add.reduceat((eid < n_a).astype(np.int64), gs)
     nb = np.diff(bounds) - na
     carrier = np.minimum.reduceat(eid, gs)
     sfirst = np.empty(len(gs) + 1, dtype=bool)
@@ -268,55 +277,94 @@ def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
     h0, h1 = g_y0[trap] - g_y0[prev], g_y1[trap] - g_y1[prev]
     area = float(np.sum((xs[t_slab + 1] - xs[t_slab]) * (h0 + h1) / 2.0))
 
-    # boundary on edges: merge runs of consecutive slabs per carrier
-    # edge and direction (region above a left-to-right piece is on its
-    # left)
+    # boundary on edges where the indicator flips across a group
+    # (region above a left-to-right piece is on its left)
     em = np.flatnonzero(below != above)
-    em = em[np.lexsort((g_slab[em], above[em], carrier[em]))]
-    s_em, c_em, fwd = g_slab[em], carrier[em], above[em]
-    run = np.empty(len(em) + 1, dtype=bool)
-    run[0] = run[-1] = True
-    run[1:-1] = (c_em[1:] != c_em[:-1]) | (fwd[1:] != fwd[:-1]) | (s_em[1:] != s_em[:-1] + 1)
-    cut = np.flatnonzero(run)
-    r0, r1 = cut[:-1], cut[1:] - 1
-    pieces = [
-        ((a, b), (c, d)) if f else ((c, d), (a, b))
-        for a, b, c, d, f in zip(
-            xs[s_em[r0]].tolist(), g_y0[em[r0]].tolist(),
-            xs[s_em[r1] + 1].tolist(), g_y1[em[r1]].tolist(), fwd[r0].tolist(),
+    runs = _merge_runs(carrier[em], above[em], g_slab[em], g_slab[em], g_y0[em], g_y1[em])
+
+    # coverage events per border: ls rows are right-slab coverage, rs
+    # rows left-slab coverage, coded left-slab end, right-slab end,
+    # right-slab start, left-slab start (0-3)
+    ls, rs = h0 > tol, h1 > tol
+    n_l, n_r = int(ls.sum()), int(rs.sum())
+    border = np.concatenate([t_slab[ls], t_slab[rs] + 1])
+    events = (
+        np.concatenate([border, border]),
+        np.concatenate([g_y0[prev[ls]], g_y1[prev[rs]], g_y0[trap[ls]], g_y1[trap[rs]]]),
+        np.repeat([2, 3, 1, 0], [n_l, n_r, n_l, n_r]),
+    )
+    return area, runs, events
+
+
+def _border_pieces(ev_b, ev_y, code, xs, tol) -> list:
+    """Boundary on slab borders: the XOR of the result's coverage from
+    the left slab and from the right slab at each border x, from the
+    coverage events of whole borders, ordered by y, then code."""
+    k = np.lexsort((code, ev_y, ev_b))
+    code, ev_y, ev_b = code[k], ev_y[k], ev_b[k]
+    cl = np.cumsum((code == 3).astype(np.int64) - (code == 0))  # each border sums to zero
+    cr = np.cumsum((code == 2).astype(np.int64) - (code == 1))
+    now = (cl & 1) != (cr & 1)
+    was = np.concatenate([[False], now[:-1]])
+    st, en = np.flatnonzero(now & ~was), np.flatnonzero(was & ~now)
+    keep = (ev_y[en] - ev_y[st]) > tol
+    st, en = st[keep], en[keep]
+    return [
+        ((x, a), (x, b)) if up else ((x, b), (x, a))
+        for x, a, b, up in zip(
+            xs[ev_b[st]].tolist(), ev_y[st].tolist(), ev_y[en].tolist(),
+            (cl[st] & 1 == 1).tolist(),  # region on the left slab: upward
         )
     ]
 
-    # boundary on slab borders: XOR of the result's coverage from the
-    # left slab and from the right slab at each border x
-    ls, rs = h0 > tol, h1 > tol
-    if ls.any() or rs.any():
-        lo = np.concatenate([g_y0[prev[ls]], g_y1[prev[rs]]])
-        hi = np.concatenate([g_y0[trap[ls]], g_y1[trap[rs]]])
-        border = np.concatenate([t_slab[ls], t_slab[rs] + 1])
-        # coverage events per border, ordered by y, then left-slab end,
-        # right-slab end, right-slab start, left-slab start (codes 0-3);
-        # ls rows are right-slab coverage, rs rows left-slab coverage
-        n_l, n_r = int(ls.sum()), int(rs.sum())
-        code = np.repeat([2, 3, 1, 0], [n_l, n_r, n_l, n_r])
-        ev_y = np.concatenate([lo, hi])
-        ev_b = np.concatenate([border, border])
-        k = np.lexsort((code, ev_y, ev_b))
-        code, ev_y, ev_b = code[k], ev_y[k], ev_b[k]
-        cl = np.cumsum((code == 3).astype(np.int64) - (code == 0))  # each border sums to zero
-        cr = np.cumsum((code == 2).astype(np.int64) - (code == 1))
-        now = (cl & 1) != (cr & 1)
-        was = np.concatenate([[False], now[:-1]])
-        st, en = np.flatnonzero(now & ~was), np.flatnonzero(was & ~now)
-        keep = (ev_y[en] - ev_y[st]) > tol
-        st, en = st[keep], en[keep]
-        pieces += [
-            ((x, a), (x, b)) if up else ((x, b), (x, a))
-            for x, a, b, up in zip(
-                xs[ev_b[st]].tolist(), ev_y[st].tolist(), ev_y[en].tolist(),
-                (cl[st] & 1 == 1).tolist(),  # region on the left slab: upward
-            )
-        ]
+
+def slab_boolean(ga, gb, op: str, tol: float = 1e-9):
+    """Boolean of two areal geometries by trapezoidal sweep.
+    Returns a list of (coords, ring_offsets) members (possibly empty),
+    or None when ring assembly or the area identity fails. Slabs are
+    swept in blocks of about _SLAB_CELLS edge incidences, so memory
+    stays bounded however many slabs an edge spans."""
+    ind = _OPS[op]
+    ea, eb = _edges(ga), _edges(gb)
+    if not len(ea) or not len(eb):
+        return None
+    lo_a, hi_a = ea.reshape(-1, 2).min(axis=0), ea.reshape(-1, 2).max(axis=0)
+    lo_b, hi_b = eb.reshape(-1, 2).min(axis=0), eb.reshape(-1, 2).max(axis=0)
+    if op == "intersection" and ((hi_a < lo_b) | (hi_b < lo_a)).any():
+        return []  # bounding boxes apart: no common point
+    e = np.concatenate([ea, eb])
+    xs = np.unique(np.concatenate([e[:, 0], e[:, 2], _crossing_xs(ea, eb)]))
+    e = np.where((e[:, 0] > e[:, 2])[:, None], e[:, [2, 3, 0, 1]], e)
+    span = np.searchsorted(xs, e[:, [0, 2]])
+    # cut the slabs into blocks of about _SLAB_CELLS incidences
+    per_slab = np.cumsum(np.bincount(span[:, 0], minlength=len(xs)) - np.bincount(span[:, 1], minlength=len(xs)))
+    cum = np.cumsum(per_slab)
+    cuts = np.searchsorted(cum, np.arange(_SLAB_CELLS, cum[-1], _SLAB_CELLS))
+    cuts = np.unique(np.concatenate([[0], cuts, [len(xs) - 1]])).tolist()
+
+    area = 0.0
+    runs: list = []
+    border_pieces: list = []
+    carry = (np.empty(0, np.int64), np.empty(0), np.empty(0, np.int64))
+    for s0, s1 in zip(cuts[:-1], cuts[1:]):
+        block = _sweep_block(e, len(ea), xs, span, s0, s1, ind, tol)
+        if block is None:
+            return None
+        area += block[0]
+        runs.append(block[1])
+        # border s1 also takes events from the next block's first slab
+        events = tuple(np.concatenate(p) for p in zip(carry, block[2]))
+        whole = (events[0] < s1) | (s1 == cuts[-1])
+        border_pieces += _border_pieces(*(p[whole] for p in events), xs, tol)
+        carry = tuple(p[~whole] for p in events)
+
+    _c, fwd, r0, r1, y0, y1 = _merge_runs(*(np.concatenate(p) for p in zip(*runs)))
+    pieces = [
+        ((a, b), (c, d)) if f else ((c, d), (a, b))
+        for a, b, c, d, f in zip(
+            xs[r0].tolist(), y0.tolist(), xs[r1 + 1].tolist(), y1.tolist(), fwd.tolist(),
+        )
+    ] + border_pieces
     rings = _trace_faces(pieces, tol)
     if rings is None:
         return None

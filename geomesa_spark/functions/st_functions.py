@@ -1531,16 +1531,21 @@ def _areal_area(coords, offs) -> float:
 
 def _wkt_roundtrip_gate(parts) -> str | None:
     """Emit WKT only if the artifact a consumer PARSES BACK keeps the
-    written structure. The %.10g writer rounds coordinates
-    ~1e-10-relative — normally invisible, but a sliver ring sitting
-    exactly on another ring's boundary can flip its containment depth
-    under that rounding (observed: a 0.02-area island inside a hole
-    re-reading as a hole of the outer shell, silently subtracting twice).
-    The parsed rings' containment-derived net area must equal their
-    written shell-minus-holes area; both come from the same rounded
-    coordinates, so rounding alone never refuses a result. A result that
-    is not structure-stable through the writer is refused — None, never
-    a wrong polygon."""
+    written structure and, up to the writer's rounding, the area. The
+    %.10g writer rounds coordinates ~1e-10-relative — normally
+    invisible, but a sliver ring sitting exactly on another ring's
+    boundary can flip its containment depth under that rounding
+    (observed: a 0.02-area island inside a hole re-reading as a hole of
+    the outer shell, silently subtracting twice). Two checks on the
+    parsed rings: their containment-derived net area must equal their
+    written shell-minus-holes area (both from the same rounded
+    coordinates, so a depth flip refuses and rounding alone never
+    does), and that written area must stay within the rounding bound of
+    the kernel's pre-write area. Rounding moves each coordinate by at
+    most 5e-10·max|c|, hence a ring's area by at most √2·5e-10·max|c|
+    per unit of its perimeter; the bound is 1e-9·max|c|·perimeter plus
+    the 1e-9-relative float slack. A result that is not stable through
+    the writer is refused — None, never a wrong polygon."""
     w = _polys_to_wkt(parts)
     if sum(len(o) - 1 for _c, o in parts) < 2:
         return w  # a lone ring has no containment depth to flip
@@ -1551,7 +1556,16 @@ def _wkt_roundtrip_gate(parts) -> str | None:
         written += ring_area[first] - sum(ring_area[first + 1:first + len(o) - 1])
         first += len(o) - 1
     if abs(_areal_area(c2, o2) - written) > 1e-9 * max(1.0, abs(written)):
-        return None
+        return None  # a ring changed containment depth
+    kernel, reach, perimeter = 0.0, 0.0, 0.0
+    for c, o in parts:
+        kernel += geo.polygon_area_deg2(c, o)
+        reach = max(reach, float(np.abs(c).max()))
+        seg = np.hypot(*np.diff(c, axis=0).T)
+        seg[np.asarray(o[1:-1]) - 1] = 0.0  # ring end → next ring start
+        perimeter += float(seg.sum())
+    if abs(written - kernel) > 1e-9 * (reach * perimeter + max(1.0, abs(kernel))):
+        return None  # moved by more than the writer's rounding
     return w
 
 

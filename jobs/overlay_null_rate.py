@@ -17,29 +17,31 @@ Classes:
   nested_islands     shell with a hole and an island member inside the
                      hole vs a rect
   multi_member       two holed members vs a holed polygon
-Star sweep: two overlapping random stars of 8, 32, 128 and 512 vertices.
+Star sweep: STAR_PAIRS pairs of overlapping random stars of 8, 32, 128,
+512 and 2048 vertices, with the traced peak memory of one call.
 
 Pure numpy — no Spark. Writes BENCH/overlay_null_rate.json (null %,
 median and mean µs per pair by class × op, median ms per star pair,
 provenance) and prints the markdown tables PLANS.md embeds.
 
-    python jobs/overlay_null_rate.py [N_PER_CLASS] [--star-pairs K] [--out PATH]
+    python jobs/overlay_null_rate.py [N_PER_CLASS] [--out PATH]
         [--against OTHER_CHECKOUT]
 
 --against times a second checkout of the repository (e.g. the parent
 commit) in the same process, pair by pair beside this one, and records
-its numbers under "against".
+its numbers under "against"; stars above PAIRED_STAR_MAX vertices time
+this checkout only.
 """
 
 from __future__ import annotations
 
 import argparse
-import contextlib
 import importlib
 import json
 import os
 import sys
 import time
+import tracemalloc
 
 import numpy as np
 
@@ -182,7 +184,9 @@ CLASSES = (
     "gc_mixed", "nested_islands", "multi_member",
 )
 SEED = 20260818
-STAR_SIZES = (8, 32, 128, 512)
+STAR_SIZES = (8, 32, 128, 512, 2048)
+STAR_PAIRS = 5  # star pairs per size
+PAIRED_STAR_MAX = 512  # --against star sizes (the pre-slab fallback chain needs minutes a pair beyond)
 
 
 def _star_ring(rng, n, cx, cy):
@@ -199,50 +203,46 @@ def star_pair(rng, n):
     return tuple(("POLYGON", r, np.asarray([0, len(r)])) for r in (a, b))
 
 
-def _package_modules() -> dict:
-    return {k: m for k, m in sys.modules.items() if k.split(".")[0] == "geomesa_spark"}
-
-
-@contextlib.contextmanager
-def _package(mods: dict | None):
-    """Run with ``mods`` as the geomesa_spark package, so that imports
-    made inside a call resolve in the same checkout as the call."""
-    mine = _package_modules()
-    sys.modules.update(mods or {})
-    try:
-        yield
-    finally:
-        sys.modules.update(mine)
-
-
-def load_checkout(root: str) -> tuple[dict, dict]:
+def load_checkout(root: str) -> dict:
     """The overlay entry points of another checkout of this repository,
-    imported side by side with this one: (ops, its package modules)."""
-    mine = _package_modules()
-    for k in mine:
-        del sys.modules[k]
+    imported beside this one. Each call runs with that checkout's
+    modules in sys.modules (two dict updates, ~µs, inside the timed
+    call), so imports made inside the call resolve in the same
+    checkout."""
+
+    def package() -> dict:
+        return {k: sys.modules.pop(k) for k in list(sys.modules) if k.split(".")[0] == "geomesa_spark"}
+
+    mine = package()
     sys.path.insert(0, os.path.abspath(root))
     try:
         other = importlib.import_module("geomesa_spark.functions.st_functions")
         importlib.import_module("geomesa_spark.functions.slab_overlay")
-        theirs = _package_modules()
     finally:
         sys.path.pop(0)
-        for k in _package_modules():
-            del sys.modules[k]
+        theirs = package()
         sys.modules.update(mine)
-    return {op: getattr(other, f"_overlay_{op}") for op in OPS}, theirs
+
+    def bind(fn):
+        def call(ga, gb):
+            sys.modules.update(theirs)
+            try:
+                return fn(ga, gb)
+            finally:
+                sys.modules.update(mine)
+
+        return call
+
+    return {op: bind(getattr(other, f"_overlay_{op}")) for op in OPS}
 
 
-def _timed(side, op, ga, gb):
-    ops, mods = side
-    with _package(mods):
-        t0 = time.perf_counter()
-        try:
-            res = ops[op](ga, gb)
-        except Exception:
-            res = None
-        return res, time.perf_counter() - t0
+def _timed(fn, ga, gb):
+    t0 = time.perf_counter()
+    try:
+        res = fn(ga, gb)
+    except Exception:
+        res = None
+    return res, time.perf_counter() - t0
 
 
 def _paired(sides: dict, op: str, pairs: list) -> dict:
@@ -253,13 +253,13 @@ def _paired(sides: dict, op: str, pairs: list) -> dict:
     labels = list(sides)
     for i, (ga, gb) in enumerate(pairs):
         for label in labels if i % 2 == 0 else labels[::-1]:
-            runs[label].append(_timed(sides[label], op, ga, gb))
+            runs[label].append(_timed(sides[label][op], ga, gb))
     return runs
 
 
-def null_rate_and_time(n: int, sides: dict, seed: int = SEED) -> dict:
+def null_rate_and_time(n: int, sides: dict) -> dict:
     """Per side, class × op: null % and per-pair time (median and mean µs)."""
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(SEED)
     keys = ("null_pct", "us_per_pair_median", "us_per_pair_mean")
     out: dict = {label: {k: {} for k in keys} for label in sides}
     for cls in CLASSES:
@@ -279,18 +279,33 @@ def null_rate_and_time(n: int, sides: dict, seed: int = SEED) -> dict:
     return out
 
 
-def star_sweep(pairs_per_size: int, sides: dict, seed: int = SEED) -> dict:
-    """Per side, star size × op: median ms per pair and nulls."""
-    rng = np.random.default_rng(seed)
+def _traced_peak_mb(fn, ga, gb) -> float:
+    """Peak of the memory Python tracks (numpy arrays included) during
+    one call, in MB."""
+    tracemalloc.start()
+    try:
+        fn(ga, gb)
+        return round(tracemalloc.get_traced_memory()[1] / 2**20, 1)
+    finally:
+        tracemalloc.stop()
+
+
+def star_sweep(sides: dict) -> dict:
+    """Per side, star size × op: median ms per pair, nulls, and for this
+    checkout the traced peak MB of one untimed call. Sizes above
+    PAIRED_STAR_MAX time this checkout only."""
+    rng = np.random.default_rng(SEED)
     out: dict = {label: {} for label in sides}
     for n in STAR_SIZES:
-        pairs = [star_pair(rng, n) for _ in range(pairs_per_size)]
+        pairs = [star_pair(rng, n) for _ in range(STAR_PAIRS)]
+        timed = sides if n <= PAIRED_STAR_MAX else {"this": sides["this"]}
         for op in OPS:
-            for label, runs in _paired(sides, op, pairs).items():
+            for label, runs in _paired(timed, op, pairs).items():
                 out[label].setdefault(str(n), {})[op] = {
                     "ms_median": round(1e3 * float(np.median([t for _r, t in runs])), 2),
                     "null": sum(r is None for r, _t in runs),
                 }
+            out["this"][str(n)][op]["traced_peak_mb"] = _traced_peak_mb(OPS[op], *pairs[0])
     return out
 
 
@@ -305,24 +320,27 @@ def _print_tables(table: dict, stars: dict, title: str) -> None:
     print("| star vertices | " + " | ".join(f"{op} ms" for op in OPS) + " |")
     print("|---|" + "---|" * len(OPS))
     for n, row in stars.items():
-        print(f"| {n} | " + " | ".join(f"{row[op]['ms_median']}" for op in OPS) + " |")
+        cells = (
+            f"{row[op]['ms_median']}" + (f" ({row[op]['traced_peak_mb']} MB)" if "traced_peak_mb" in row[op] else "")
+            for op in OPS
+        )
+        print(f"| {n} | " + " | ".join(cells) + " |")
 
 
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("n", nargs="?", type=int, default=300, help="pairs per class")
-    ap.add_argument("--star-pairs", type=int, default=5, help="star pairs per size")
     ap.add_argument("--against", help="another checkout to time pair by pair beside this one")
     ap.add_argument("--out", default=os.path.join(ROOT, "BENCH", "overlay_null_rate.json"))
     args = ap.parse_args()
     t0 = time.perf_counter()
-    sides = {"this": (OPS, None)}
+    sides = {"this": OPS}
     if args.against:
         sides["against"] = load_checkout(args.against)
     table = null_rate_and_time(args.n, sides)
-    stars = star_sweep(args.star_pairs, sides)
+    stars = star_sweep(sides)
     report = {
-        "provenance": provenance(args.n, SEED, star_pairs_per_size=args.star_pairs,
+        "provenance": provenance(args.n, SEED, star_pairs_per_size=STAR_PAIRS,
                                  wall_s=round(time.perf_counter() - t0, 1)),
         "n_per_class": args.n,
         **table["this"],

@@ -760,3 +760,57 @@ def test_escape_witness_ignores_zero_width_slit():
     square = geo.parse_wkt("POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))")
     assert not geo._escape_witness(slit[1], slit[2], square[1], square[2])
     assert geo.pred_covers(geo.relate_geoms(*slit, *square))
+
+
+_ROUNDING_A = (
+    "POLYGON ((1.67841383 3.649918467, -1.701263108 2.112716727, -1.797332335 1.964056448, "
+    "-1.87421321 1.832131616, 4.512241647 -1.384304965, 1.67841383 3.649918467))"
+)
+_ROUNDING_B = (
+    "POLYGON ((2.20143643 3.413795276, -3.598668725 0.932988569, -4.127074918 -2.278894149, "
+    "-3.356734924 -4.234976765, 0.3262168594 -6.467431418, 5.864677603 -2.017209542, "
+    "2.20143643 3.413795276), (1.526086824 -1.523977982, 2.500412725 -1.523977982, "
+    "2.500412725 -0.5496520801, 1.526086824 -0.5496520801, 1.526086824 -1.523977982), "
+    "(-0.6177542754 -1.428767257, 0.8704046907 -1.428767257, 0.8704046907 0.05939170876, "
+    "-0.6177542754 0.05939170876, -0.6177542754 -1.428767257))"
+)
+
+
+def test_roundtrip_gate_accepts_rounding_drift():
+    """A holed_generic pair (overlay audit generator, seed 777) whose
+    exact difference moves by 2.0e-9 in area through the %.10g writer
+    alone — more than a flat 1e-9-relative tolerance, well inside the
+    rounding bound — is answered. Its symmetric difference is the two
+    OGC parts B \\ A (with B's holes) and A \\ B, not one polygon whose
+    last ring touches its shell at two points."""
+    from geomesa_spark.functions.slab_overlay import slab_boolean
+
+    A, B = geo.parse_wkt(_ROUNDING_A), geo.parse_wkt(_ROUNDING_B)
+    parts = slab_boolean(A, B, "difference")
+    kernel = sum(geo.polygon_area_deg2(c, o) for c, o in parts)
+    w = stf._wkt_roundtrip_gate(parts)
+    assert w is not None and w == stf._overlay_difference(A, B)
+    assert abs(_result_area(w) - kernel) > 1e-9 * max(1.0, kernel)
+    area_a, area_b = _geom_area(A), _geom_area(B)
+    inter = _result_area(stf._overlay_intersection(A, B))
+    sd = stf._overlay_symdifference(A, B)
+    k, c, o = geo.parse_wkt(sd)
+    assert k == "MULTIPOLYGON" and len(geo.geom_parts(k, c, o)) == 2
+    assert abs(_result_area(sd) - (area_a + area_b - 2 * inter)) < 1e-8
+
+
+def test_roundtrip_gate_refuses_drift_beyond_rounding(monkeypatch):
+    """A written artifact whose area moved by more than the writer's
+    rounding can explain (here: a hole shrunk by 1e-6) is refused even
+    though every ring keeps its containment depth."""
+    c = np.asarray(
+        [(0, 0), (10, 0), (10, 10), (0, 10), (0, 0), (2, 2), (2, 8), (8, 8), (8, 2), (2, 2)],
+        dtype=np.float64,
+    )
+    parts = [(c, np.asarray([0, 5, 10]))]
+    assert stf._wkt_roundtrip_gate(parts) == "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), (2 2, 2 8, 8 8, 8 2, 2 2))"
+    write = stf._polys_to_wkt
+    shrunk = c.copy()
+    shrunk[5:] = 5.0 + (shrunk[5:] - 5.0) * (1.0 - 1e-6)
+    monkeypatch.setattr(stf, "_polys_to_wkt", lambda _parts: write([(shrunk, parts[0][1])]))
+    assert stf._wkt_roundtrip_gate(parts) is None
